@@ -2,7 +2,8 @@
 
 The reference discovers schema at runtime from the Parquet footer
 (Readers/CodercatParquetRowReader.php:28-47); Spark does the same but
-typed, via spark.read.parquet. The one impedance mismatch is the
+typed, via sources.parquet.read_parquet (footer schema inferred once
+per file signature). The one impedance mismatch is the
 `events` table's `ts` column, which the driver has generated in two
 shapes across rounds:
   * TIMESTAMP(NANOS) — no native Spark type; with
@@ -24,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_to_sql_spark.session import apply_runtime_confs
+from parquet_to_sql_spark.sources.parquet import read_parquet
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -55,7 +57,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     apply_runtime_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

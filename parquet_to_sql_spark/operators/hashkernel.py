@@ -407,10 +407,15 @@ def _winnow_selected(h, wc, w: int):
             np.minimum(cmin_reg, c[starts + off], out=cmin_reg)
     else:
         cmin_reg = np.zeros(0, np.int64)
-    # short docs (1 <= wc < w): one window over the whole doc
+    # short docs (1 <= wc < w): one window over the whole doc.  Segment
+    # at EVERY non-empty doc's start (empty docs own no elements, so
+    # consecutive starts delimit exactly one doc each), then pick the
+    # short ones: segmenting at short starts only would run a short
+    # doc's segment on through any longer doc that follows it.
     short = (wc >= 1) & (wc < w)
     if short.any():
-        cmin_short = np.minimum.reduceat(c, doc_start[short])
+        nonempty = wc >= 1
+        cmin_short = np.minimum.reduceat(c, doc_start[nonempty])[short[nonempty]]
     # number of winnow windows per doc
     mw = np.where(short, 1, mw_reg)
     # interleave: windows are laid out doc by doc; regular docs take

@@ -1877,10 +1877,13 @@ _PROD_BUCKETS = " UNION ALL ".join(
     "dedup_minhash_production_audit",
     headline=True,
     tags=("dedup", "minhash", "audit", "llm-pipeline", "scale-path"),
+    # MATERIALIZED: DuckDB 1.0 inlines a CTE at every reference, so the
+    # 16-way bucket union would rebuild the k=128 signatures per band
+    # and per join side (~6x the oracle's runtime at sf0.1)
     oracle=f"""
     WITH w0 AS (
       SELECT doc_id, {DUCK_WORDS} AS w FROM documents
-    ), mut AS (
+    ), mut AS MATERIALIZED (
       SELECT doc_id + 1000000 AS doc_id,
              array_to_string(list_transform(range(1, len(w) + 1),
                i -> CASE WHEN i % (3 * (1 << (doc_id % 5))) = 0
@@ -1893,11 +1896,11 @@ _PROD_BUCKETS = " UNION ALL ".join(
       SELECT doc_id, unnest({{shingles}}) AS shingle FROM corpus
     ), hashed AS (
       SELECT doc_id, {{fold}} AS x FROM sh
-    ), sig AS (
+    ), sig AS MATERIALIZED (
       SELECT doc_id,
       {{sig_cols}}
       FROM hashed GROUP BY doc_id
-    ), buckets AS ({{buckets}}),
+    ), buckets AS MATERIALIZED ({{buckets}}),
     cand AS (
       SELECT DISTINCT l.doc_id AS doc1, r.doc_id AS doc2
       FROM buckets l JOIN buckets r

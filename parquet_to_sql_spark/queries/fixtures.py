@@ -23,6 +23,8 @@ import tempfile
 
 
 _COUNT_MEMO: dict[str, int] = {}
+# the documents file signature each memoized count was taken from
+_COUNT_SIGS: dict[str, tuple] = {}
 
 
 def corpus_count(spark, sf_dir: str) -> int:
@@ -30,15 +32,18 @@ def corpus_count(spark, sf_dir: str) -> int:
     "What's wrong" #3 hygiene): fixture synthesis and modular edge
     arithmetic need the corpus size DRIVER-side before the plan can
     run, but re-counting on every query BUILD made each build an
-    eager full-table action.  One count per (session, sf dir) —
-    parquet row-group metadata only — and every subsequent build is
-    a dict hit.  The driver regenerating testdata invalidates the
-    memo naturally (new process, empty memo)."""
-    key = os.path.normpath(sf_dir)
-    if key not in _COUNT_MEMO:
-        from parquet_to_sql_spark.catalog import load_table
+    eager full-table action.  One count per (sf dir, documents file
+    signature) — parquet row-group metadata only — and every
+    subsequent build is a dict hit; a corpus rewritten in place
+    (new size or mtime) is counted again."""
+    from parquet_to_sql_spark.catalog import load_table, table_path
+    from parquet_to_sql_spark.sources.parquet import file_signature
 
+    key = os.path.normpath(sf_dir)
+    sig = file_signature(table_path(sf_dir, "documents"))
+    if key not in _COUNT_MEMO or _COUNT_SIGS.get(key) != sig:
         _COUNT_MEMO[key] = load_table(spark, sf_dir, "documents").count()
+        _COUNT_SIGS[key] = sig
     return _COUNT_MEMO[key]
 
 

@@ -266,7 +266,9 @@ class _CopyIn:
 
     def __init__(self, conn: Connection):
         self._conn = conn
-        self._pending = b""
+        # bytearray: appends are amortized O(1), where bytes += would
+        # copy the whole pending frame on every write
+        self._pending = bytearray()
 
     def __enter__(self) -> "_CopyIn":
         return self
@@ -277,12 +279,12 @@ class _CopyIn:
         self._pending += b
         if len(self._pending) >= 65536:
             self._conn._send(b"d", self._pending)
-            self._pending = b""
+            self._pending = bytearray()
 
     def __exit__(self, exc_type, exc, tb) -> bool:
         if self._pending:
             self._conn._send(b"d", self._pending)
-            self._pending = b""
+            self._pending = bytearray()
         if exc_type is None:
             self._conn._send(b"c")  # CopyDone
         else:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from parquet_to_sql_spark.session import apply_runtime_confs
+from parquet_to_sql_spark.sources.parquet import read_parquet
 
 
 def _probe_schema(spark: SparkSession, path: str):
@@ -44,7 +45,7 @@ def _probe_schema(spark: SparkSession, path: str):
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path).schema
+        return read_parquet(spark, path).schema
     except AnalysisException as exc:
         cond = exc.getCondition() or ""
         if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):

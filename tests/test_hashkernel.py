@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from parquet_to_sql_spark.functions.hashing import (
     char_fold_hash,
@@ -16,6 +17,7 @@ from parquet_to_sql_spark.functions.hashing import (
     shingle_hashes_from,
     word_hashes,
 )
+from parquet_to_sql_spark.operators import hashkernel
 from parquet_to_sql_spark.operators.hashkernel import (
     hashedfold_kgram_hashes,
     simhash_arrow,
@@ -43,6 +45,20 @@ def _docs(spark):
     )
 
 
+def _staged_tokens(df):
+    """(doc_id, _w = ws_tokens(text)) as a real column.  The JVM
+    references index a words array once per shingle position; left as
+    an inline expression, the array would be rebuilt at every index
+    (quadratic per doc), as hashing.word_hashes documents."""
+    return df.select("doc_id", ws_tokens(F.col("text")).alias("_w"))
+
+
+def _staged_word_hashes(df):
+    """(doc_id, hw = word_hashes(ws_tokens(text))) as a real column,
+    for the same reason as _staged_tokens."""
+    return df.select("doc_id", word_hashes(ws_tokens(F.col("text"))).alias("hw"))
+
+
 def _assert_same(got, want, keys=("doc_id",)):
     g = {tuple(r[k] for k in keys): r for r in got.collect()}
     w = {tuple(r[k] for k in keys): r for r in want.collect()}
@@ -64,10 +80,10 @@ def test_word_hash_arrays_exact(spark, source):
 @pytest.mark.parametrize("n", [2, 3])
 def test_stringfold_kgrams_exact(spark, source, n):
     df = _edge_df(spark) if source == "edges" else _docs(spark)
-    want = df.select(
+    want = _staged_tokens(df).select(
         "doc_id",
         F.transform(
-            positional_shingles(ws_tokens(F.col("text")), n), char_fold_hash
+            positional_shingles(F.col("_w"), n), char_fold_hash
         ).alias("shs"),
     )
     _assert_same(stringfold_kgram_hashes(df, "doc_id", "text", n), want)
@@ -77,14 +93,8 @@ def test_stringfold_kgrams_exact(spark, source, n):
 @pytest.mark.parametrize("n", [3, 5])
 def test_hashedfold_kgrams_exact(spark, source, n):
     df = _edge_df(spark) if source == "edges" else _docs(spark)
-    want = df.select(
-        "doc_id",
-        F.col("text"),
-    ).select(
-        "doc_id",
-        shingle_hashes_from(
-            word_hashes(ws_tokens(F.col("text"))), n
-        ).alias("shs"),
+    want = _staged_word_hashes(df).select(
+        "doc_id", shingle_hashes_from(F.col("hw"), n).alias("shs")
     )
     _assert_same(hashedfold_kgram_hashes(df, "doc_id", "text", n), want)
 
@@ -107,11 +117,8 @@ def test_sig_and_shingle_arrays_exact(spark, source):
     # shs == the hashedfold twin, every row (empty arrays included)
     _assert_same(
         got.select("doc_id", "shs"),
-        df.select(
-            "doc_id",
-            shingle_hashes_from(
-                word_hashes(ws_tokens(F.col("text"))), n
-            ).alias("shs"),
+        _staged_word_hashes(df).select(
+            "doc_id", shingle_hashes_from(F.col("hw"), n).alias("shs")
         ),
     )
     # sig == the JVM explode+groupBy signatures, as arrays; the JVM
@@ -152,19 +159,20 @@ def test_audit_mutant_stats_exact(spark, source):
         " ",
     )
     want = (
-        base.select("doc_id", "text", mut_text.alias("_mt"))
+        base.select("doc_id", "_w", mut_text.alias("_mt"))
+        .select("doc_id", "_w", ws_tokens(F.col("_mt")).alias("_wm"))
         .select(
             "doc_id",
             F.transform(
-                positional_shingles(ws_tokens(F.col("text")), 3),
+                positional_shingles(F.col("_w"), 3),
                 char_fold_hash,
             ).alias("shs_o"),
             F.transform(
-                positional_shingles(ws_tokens(F.col("_mt")), 3),
+                positional_shingles(F.col("_wm"), 3),
                 char_fold_hash,
             ).alias("shs_m"),
-            word_shingles(ws_tokens(F.col("text")), 3).alias("_sho"),
-            word_shingles(ws_tokens(F.col("_mt")), 3).alias("_shm"),
+            word_shingles(F.col("_w"), 3).alias("_sho"),
+            word_shingles(F.col("_wm"), 3).alias("_shm"),
         )
         .select(
             "doc_id",
@@ -287,3 +295,78 @@ def test_simhash_exact(spark, source, bits):
         simhash_arrow(df, "doc_id", "text", bits=bits),
         simhash_sketch_jvm(df, "doc_id", "text", bits=bits),
     )
+
+
+class _CapturedKernel:
+    """Stands in for a DataFrame: records the function a kernel hands
+    to mapInArrow, so it can be run on hand-made Arrow batches without
+    a Spark job."""
+
+    dtypes = [("doc_id", "bigint"), ("text", "string")]
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, fn, schema):
+        self.fn = fn
+        return self
+
+    def filter(self, cond):
+        return self
+
+
+# every public kernel of operators/hashkernel.py with its parameters
+# (winnow at the k=3, w=4 of the failing example)
+KERNELS = {
+    "stringfold_kgram_hashes": ("stringfold_kgram_hashes", {"n": 3}),
+    "hashedfold_kgram_hashes": ("hashedfold_kgram_hashes", {"n": 3}),
+    "sig_and_shingle_arrays": ("sig_and_shingle_arrays", {"n": 3, "k": 8}),
+    "word_hash_arrays": ("word_hash_arrays", {}),
+    "simhash_arrow": ("simhash_arrow", {"bits": 16}),
+    "winnow_kgram_fingerprints": ("winnow_kgram_fingerprints", {"k": 3, "w": 4}),
+    "winnow_kgram_fp_sets": ("winnow_kgram_fp_sets", {"k": 3, "w": 4}),
+    "audit_mutant_stats": ("audit_mutant_stats", {"n": 3}),
+    "audit_mutant_stats_sig": ("audit_mutant_stats", {"n": 3, "k": 8}),
+}
+
+
+def _kernel_rows(fn, texts, ids):
+    import pyarrow as pa
+
+    rb = pa.record_batch(
+        [pa.array(ids, pa.int64()), pa.array(texts, pa.string())],
+        names=["doc_id", "text"],
+    )
+    return [row for out in fn(iter([rb])) for row in out.to_pylist()]
+
+
+@pytest.mark.parametrize("kernel", sorted(KERNELS))
+@settings(max_examples=25, deadline=None)
+@given(
+    docs=st.lists(
+        st.one_of(
+            st.none(),
+            st.sampled_from(EDGES),
+            st.lists(st.sampled_from("aa bb cc dd".split()), max_size=9).map(" ".join),
+        ),
+        max_size=6,
+    )
+)
+@example(docs=[" ".join(ws) for ws in [["aa"] * 3, ["aa"] * 6, [], []]])
+@example(docs=["x \t\n y", "w " * 50, "x \t\n y"])
+def test_kernel_batch_composition(spark, kernel, docs):
+    """A kernel's output over ONE Arrow batch equals the concatenation
+    of its outputs over one-doc batches: results must not depend on
+    how rows are split into batches (a short doc once picked up a
+    longer neighbour's window minimum in the winnow kernel)."""
+    from parquet_to_sql_spark.operators import text
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(text, "rebalance_for_compute", lambda df: df)
+        name, params = KERNELS[kernel]
+        kernel_fn = getattr(hashkernel, name)
+        fn = kernel_fn(_CapturedKernel(), "doc_id", "text", **params).fn
+    ids = list(range(len(docs)))
+    whole = _kernel_rows(fn, docs, ids)
+    per_doc = [r for i, d in zip(ids, docs) for r in _kernel_rows(fn, [d], [i])]
+    assert whole == per_doc

@@ -115,6 +115,38 @@ def test_copy_batching_one_txn_per_batch():
     assert written == 12
 
 
+def test_pg_wire_copy_frames_concatenate_to_exact_input():
+    """The wire client's COPY channel coalesces writes into CopyData
+    frames of at least 64 KiB (the last one excepted), each closed by
+    the write that reached the threshold, and the frames carry exactly
+    the bytes written, in order."""
+    from parquet_to_sql_spark.sinks.pg_wire import _CopyIn
+
+    class WireConn:
+        def __init__(self):
+            self.sent = []
+
+        def _send(self, type_byte, payload=b""):
+            self.sent.append((type_byte, bytes(payload)))
+
+        def _recv_message(self):
+            return b"Z", b"I"  # ReadyForQuery
+
+    conn = WireConn()
+    lines = [f"{i}\t{'x' * (i % 300)}\n" for i in range(5000)]
+    with _CopyIn(conn) as cp:
+        for i, line in enumerate(lines):
+            cp.write(line if i % 2 else line.encode())
+    types = [t for t, _ in conn.sent]
+    frames = [p for t, p in conn.sent if t == b"d"]
+    assert types == [b"d"] * len(frames) + [b"c"]
+    assert len(frames) > 1
+    assert b"".join(frames) == "".join(lines).encode()
+    longest_line = max(map(len, lines))
+    assert all(65536 <= len(f) < 65536 + longest_line for f in frames[:-1])
+    assert 0 < len(frames[-1])
+
+
 # ------------------------------------------------- 2. rollback path
 def test_copy_failure_rolls_back_and_wraps():
     """Parity with tests/ParquetImporterTest.php:51-76."""

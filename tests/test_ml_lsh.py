@@ -130,16 +130,22 @@ def test_minhash_production_banding_matches_theoretical_s_curve(spark):
             corpus, "doc_id", "text", k=128, bands=16, n=3
         ).collect()
     }
-    sets_o = docs.select(
-        "doc_id", word_shingles(ws_tokens(F.col("text")), 3).alias("sh_o")
+    # tokens staged as a real column: word_shingles indexes the words
+    # array once per position, and an inline ws_tokens would be
+    # re-split at every index
+    sets_o = base.select(
+        "doc_id", word_shingles(F.col("_w"), 3).alias("sh_o")
     )
     sets_m = mut.select(
         (F.col("doc_id") - 1000000).alias("doc_id"),
-        word_shingles(ws_tokens(F.col("text")), 3).alias("sh_m"),
-    )
-    planted = (
-        sets_o.join(sets_m, "doc_id")
-        .filter((F.size("sh_o") > 0) & (F.size("sh_m") > 0))
+        ws_tokens(F.col("text")).alias("_wm"),
+    ).select("doc_id", word_shingles(F.col("_wm"), 3).alias("sh_m"))
+    # pairs with an empty side are dropped from the collected rows: a Spark filter
+    # on the set sizes would be pushed below the staged tokens and
+    # re-evaluate the whole shingle chain inline at the scan
+    planted = [
+        r
+        for r in sets_o.join(sets_m, "doc_id")
         .select(
             "doc_id",
             F.size(F.array_intersect("sh_o", "sh_m")).alias("common"),
@@ -147,7 +153,8 @@ def test_minhash_production_banding_matches_theoretical_s_curve(spark):
             F.size("sh_m").alias("n2"),
         )
         .collect()
-    )
+        if r.n1 > 0 and r.n2 > 0
+    ]
     assert len(planted) >= 400, "fixture must plant hundreds of pairs"
     exp = var = 0.0
     observed = 0
