@@ -7,7 +7,12 @@ Reference signature (ImportParquetCommand.php:10-17):
 Here:
   python -m parquet_to_sql_spark.cli PATH TABLE [--map src=dst ...]
       [--connection URL] [--batch N] [--timeout S] [--truncate]
-      [--sink {jdbc,copy,copy-binary,pg,duckdb,file}] [--format {parquet,csv,json,orc}]
+      [--sink {jdbc,copy,pg,duckdb,file}] [--format {parquet,csv,json,orc}]
+
+Like the reference's options (ImportParquetCommand.php:24-26), an
+omitted --connection/--batch/--timeout/--sink falls back to the
+config file, then the PARQUET_TO_SQL_* environment variables, then
+the defaults (config.load_config).
 
 For --sink file, --connection is the base DIRECTORY of the lake; the
 import lands at <connection>/<table> in --format.
@@ -22,6 +27,7 @@ import argparse
 import json
 import sys
 
+from parquet_to_sql_spark.config import SINK_KINDS, build_sink, load_config
 from parquet_to_sql_spark.importer import Importer
 from parquet_to_sql_spark.session import get_spark
 
@@ -45,40 +51,34 @@ def parse_column_map(pairs: list[str]) -> dict[str, str]:
     return out
 
 
-def build_sink(args):
-    """CLI flags -> EngineConfig -> the single config.build_sink
-    dispatch (flags are the highest-precedence layer of the documented
-    config contract, so constructing the config directly is exact)."""
-    from parquet_to_sql_spark.config import EngineConfig
-    from parquet_to_sql_spark.config import build_sink as _build_sink
-
-    cfg = EngineConfig(
-        connection=args.connection,
-        batch_size=args.batch,
-        copy_timeout=args.timeout,
-        sink=args.sink,
-    )
-    return _build_sink(cfg, file_format=args.format)
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="parquet-import",
                                  description="Import Parquet into a SQL table (Spark-powered)")
     ap.add_argument("path")
     ap.add_argument("table")
     ap.add_argument("--map", action="append", default=[], metavar="SRC=DST")
-    ap.add_argument("--connection", required=True,
+    ap.add_argument("--connection",
                     help="JDBC URL / Postgres DSN / DuckDB file per --sink")
-    ap.add_argument("--batch", type=int, default=5000)
-    ap.add_argument("--timeout", type=int, default=300)
+    ap.add_argument("--batch", type=int)
+    ap.add_argument("--timeout", type=int)
     ap.add_argument("--truncate", action="store_true")
-    ap.add_argument("--sink", choices=["jdbc", "copy", "copy-binary", "pg", "duckdb", "file"], default="jdbc")
+    ap.add_argument("--sink", choices=SINK_KINDS)
     ap.add_argument("--format", choices=["parquet", "csv", "json", "orc"],
                     default="parquet", help="output format for --sink file")
     args = ap.parse_args(argv)
+    try:
+        cfg = load_config(
+            connection=args.connection,
+            batch_size=args.batch,
+            copy_timeout=args.timeout,
+            sink=args.sink,
+        )
+        sink = build_sink(cfg, file_format=args.format)
+    except ValueError as exc:  # no connection anywhere, bad config value
+        ap.error(str(exc))
 
     spark = get_spark(app_name="parquet-import")
-    importer = Importer(spark, build_sink(args))
+    importer = Importer(spark, sink)
     result = importer.import_(
         args.path,
         args.table,

@@ -4,8 +4,8 @@ The reference publishes a user-editable config file whose every key
 falls back to an environment variable, then a default
 (config/parquet-to-sql.php:5-11, merged + published by
 ParquetToSqlServiceProvider.php:12-31). Same three keys here, same
-env-var names, plus the sink kind (the Spark engine has three sinks
-where the reference has one connection abstraction).
+env-var names, plus the sink kind (the Spark engine has the five sinks
+of SINK_KINDS where the reference has one connection abstraction).
 
 Precedence, highest first (documented contract):
   1. explicit value in an ImportJob spec / CLI flag
@@ -16,6 +16,8 @@ Precedence, highest first (documented contract):
      PARQUET_TO_SQL_SINK)
   4. built-in defaults (batch 5000, timeout 300 s — the reference's
      numbers; sink "jdbc" — the portable path)
+
+Every default is defined here once; the sinks and the CLI import them.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from dataclasses import asdict, dataclass
 DEFAULT_BATCH_SIZE = 5000  # config/parquet-to-sql.php:8
 DEFAULT_COPY_TIMEOUT = 300  # config/parquet-to-sql.php:11
 DEFAULT_SINK = "jdbc"
+SINK_KINDS = ("jdbc", "copy", "pg", "duckdb", "file")
 CONFIG_ENV = "PARQUET_TO_SQL_CONFIG"
 CONFIG_BASENAME = "parquet-to-sql.json"
 
@@ -86,20 +89,18 @@ def load_config(path: str | None = None, **overrides) -> EngineConfig:
         copy_timeout=int(resolved.get("copy_timeout", DEFAULT_COPY_TIMEOUT)),
         sink=str(resolved.get("sink", DEFAULT_SINK)),
     )
-    if cfg.sink not in ("jdbc", "copy", "copy-binary", "pg", "duckdb", "file"):
-        raise ValueError(
-            f"unknown sink kind {cfg.sink!r} (jdbc|copy|copy-binary|pg|duckdb|file)"
-        )
+    if cfg.sink not in SINK_KINDS:
+        raise ValueError(f"unknown sink kind {cfg.sink!r} ({'|'.join(SINK_KINDS)})")
     return cfg
 
 
 def build_sink(cfg: EngineConfig, *, file_format: str = "parquet"):
     """Instantiate the configured sink (the DI layer the reference's
     service provider plays — ParquetToSqlServiceProvider.php:14-20).
-    The ONE sink dispatch — the CLI builds an EngineConfig from its
-    flags and delegates here (round-3 debt: the dispatches had
-    drifted apart).  ``file_format`` only applies to the `file` sink,
-    where ``connection`` is the lake base directory."""
+    The ONE sink dispatch — the CLI and ImportJob resolve their values
+    through load_config and delegate here.  ``file_format`` only
+    applies to the `file` sink, where ``connection`` is the lake base
+    directory."""
     if cfg.connection is None:
         raise ValueError("no connection configured (spec/file/env)")
     if cfg.sink == "file":
@@ -114,12 +115,6 @@ def build_sink(cfg: EngineConfig, *, file_format: str = "parquet"):
         from parquet_to_sql_spark.sinks.copy_pg import CopySink
 
         return CopySink(
-            cfg.connection, batch_size=cfg.batch_size, timeout_s=cfg.copy_timeout
-        )
-    if cfg.sink == "copy-binary":
-        from parquet_to_sql_spark.sinks.copy_pg import BinaryCopySink
-
-        return BinaryCopySink(
             cfg.connection, batch_size=cfg.batch_size, timeout_s=cfg.copy_timeout
         )
     if cfg.sink == "pg":

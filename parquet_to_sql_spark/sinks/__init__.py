@@ -2,14 +2,19 @@
 
 The reference has exactly two: Postgres COPY (fast path,
 ParquetImporter.php:98-121) and batched INSERT fallback (:123-125).
-Here:
+Here, one class per sink kind of config.SINK_KINDS:
   * CopySink      — parallel per-partition COPY FROM STDIN (the scale
-                    fast path; needs psycopg at the executors)
+                    fast path; psycopg or the stdlib pg_wire client)
+                    — sink "copy"
+  * InsertSink    — the same per-partition batch loop sending
+                    multi-row INSERTs (sinks/insert_pg.py); sink "pg"
+                    probes the connection and picks CopySink or this
   * JdbcSink      — Spark's native JDBC writer (batched INSERTs; the
-                    portable fallback, like the reference's)
+                    portable fallback, like the reference's) — "jdbc"
   * DuckDbSink    — driver-side batched INSERT into a local DuckDB
                     file; exercises the full normalize/batch/truncate
-                    surface hermetically in tests
+                    surface hermetically in tests — "duckdb"
+  * FileSink      — partitioned/bucketed file lake — "file"
 """
 
 from parquet_to_sql_spark.sinks.jdbc import JdbcSink

@@ -1,4 +1,5 @@
-r"""Postgres COPY sink — the scale fast path.
+r"""Postgres COPY sink — the scale fast path — and the batch loop both
+Postgres sinks share.
 
 Reference semantics (ParquetImporter.php:90-121), generalized from
 one sequential writer to one writer per partition:
@@ -11,6 +12,11 @@ one sequential writer to one writer per partition:
     config/parquet-to-sql.php:11);
   * a failed COPY rolls back its transaction and surfaces a
     RuntimeError naming the cause (:109-118).
+
+``batch_partition`` is that connect/batch/timeout/commit/rollback loop
+and ``PgBatchSink`` the write scaffolding around it; the COPY sink
+here and the INSERT fallback (sinks/insert_pg.py) differ only in how
+a frame is rendered and how one batch is sent.
 
 Atomicity note (SURVEY.md §7 "what's hard" #1): the reference commits
 PER BATCH, so partial success is already its contract; with N
@@ -32,15 +38,13 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
+from parquet_to_sql_spark.config import DEFAULT_BATCH_SIZE, DEFAULT_COPY_TIMEOUT
 from parquet_to_sql_spark.identifiers import (
     assert_safe_column_names,
     assert_safe_table_name,
     quote_identifier,
 )
 from parquet_to_sql_spark.normalize import copy_lines
-
-DEFAULT_BATCH_SIZE = 5000  # config/parquet-to-sql.php:8
-DEFAULT_TIMEOUT_S = 300  # config/parquet-to-sql.php:11
 
 
 def _default_connection_factory(dsn: str):
@@ -107,6 +111,60 @@ def _copy_stream(
     return n
 
 
+def batch_partition(
+    items: Iterable,
+    *,
+    dsn: str,
+    batch_size: int,
+    timeout_s: int,
+    connection_factory: Callable[[str], object],
+    send: Callable[[object, list], None],
+    command: str,
+) -> int:
+    """The per-partition batch-transaction loop of both Postgres sinks
+    (the reference's flush loop, ParquetImporter.php:56-71 + :102-118).
+
+    Runs on an executor. One connection per partition; per batch of
+    batch_size items: one transaction with `SET LOCAL
+    statement_timeout`, ``send(cursor, batch)``, commit.  A failed
+    batch rolls back and raises ``RuntimeError("<command> command
+    failed: ...")``, leaving prior batches committed.  Returns the
+    number of items COMMITTED.
+
+    Retry caveat (inherited from the reference's per-batch-commit
+    contract): if a task dies AFTER some batches committed, Spark's
+    retry re-runs the whole partition and re-sends the committed
+    batches — at-least-once. Loads that must survive task retries
+    exactly-once go through write_atomic (ledger-guarded staging) or
+    write_idempotent instead.
+    """
+    conn = connection_factory(dsn)
+    try:
+        def flush(b: list) -> int:
+            if not b:
+                return 0
+            cur = conn.cursor()
+            try:
+                cur.execute(f"SET LOCAL statement_timeout = {int(timeout_s * 1000)}")
+                send(cur, b)
+                conn.commit()
+                return len(b)
+            except Exception as exc:
+                conn.rollback()
+                raise RuntimeError(f"{command} command failed: {exc}") from exc
+
+        written = 0
+        batch: list = []
+        for item in items:
+            batch.append(item)
+            if len(batch) >= batch_size:
+                written += flush(batch)
+                batch = []
+        return written + flush(batch)
+    finally:
+        conn.close()
+
+
 def copy_partition(
     lines: Iterable[str],
     *,
@@ -117,63 +175,39 @@ def copy_partition(
     timeout_s: int,
     connection_factory: Callable[[str], object],
 ) -> int:
-    """Stream one partition's COPY lines in batch_size transactions.
-
-    Runs on an executor. One connection per partition; one
-    transaction + one COPY statement per batch (reference parity:
-    ParquetImporter.php:102-113). Returns the number of lines COMMITTED
-    (a failed batch raises after rollback, so its lines are not
-    counted).
-
-    Retry caveat (inherited from the reference's per-batch-commit
-    contract): if a task dies AFTER some batches committed, Spark's
-    retry re-runs the whole partition and re-COPYs the committed
-    batches — at-least-once. Loads that must survive task retries
-    exactly-once go through write_atomic (ledger-guarded staging) or
-    write_idempotent instead.
-    """
+    """Stream one partition's COPY lines in batch_size transactions,
+    one COPY statement per batch (batch_partition)."""
     quoted_table = quote_identifier(table)
-    col_list = ", ".join(quote_identifier(c) for c in columns)
-    sql = f"COPY {quoted_table} ({col_list}) FROM STDIN"
-    conn = connection_factory(dsn)
-    written = 0
-    try:
-        batch: list[str] = []
+    quoted_columns = [quote_identifier(c) for c in columns]
+    sql = f"COPY {quoted_table} ({', '.join(quoted_columns)}) FROM STDIN"
 
-        def flush(b: list[str]) -> int:
-            if not b:
-                return 0
-            cur = conn.cursor()
-            try:
-                cur.execute(f"SET LOCAL statement_timeout = {int(timeout_s * 1000)}")
-                _copy_stream(
-                    cur, sql, b,
-                    quoted_table=quoted_table,
-                    quoted_columns=[quote_identifier(c) for c in columns],
-                )
-                conn.commit()
-                return len(b)
-            except Exception as exc:
-                conn.rollback()
-                raise RuntimeError(f"COPY command failed: {exc}") from exc
+    def send(cur, batch: list[str]) -> None:
+        _copy_stream(
+            cur, sql, batch, quoted_table=quoted_table, quoted_columns=quoted_columns
+        )
 
-        for line in lines:
-            batch.append(line)
-            if len(batch) >= batch_size:
-                written += flush(batch)
-                batch = []
-        written += flush(batch)
-        return written
-    finally:
-        conn.close()
+    return batch_partition(
+        lines, dsn=dsn, batch_size=batch_size, timeout_s=timeout_s,
+        connection_factory=connection_factory, send=send, command="COPY",
+    )
 
 
-class CopySink:
+class PgBatchSink:
+    """Write scaffolding shared by the Postgres sinks: identifier
+    checks, driver-side truncate, ``num_writers`` repartition, and one
+    ``batch_partition`` writer per partition whose committed count
+    comes back through an accumulator.  A subclass names its frame
+    rendering (``render``) and its per-partition writer
+    (``write_partition``)."""
+
+    render: Callable[[DataFrame], DataFrame]
+    write_partition: Callable[..., int]
+
     def __init__(
         self,
         dsn: str,
         batch_size: int = DEFAULT_BATCH_SIZE,
-        timeout_s: int = DEFAULT_TIMEOUT_S,
+        timeout_s: int = DEFAULT_COPY_TIMEOUT,
         num_writers: int | None = None,
         connection_factory: Callable[[str], object] | None = None,
     ):
@@ -184,7 +218,7 @@ class CopySink:
         self.connection_factory = connection_factory or _default_connection_factory
 
     def write(self, df: DataFrame, table: str, truncate: bool = False) -> int:
-        """Write and return the number of rows actually COPYed.
+        """Write and return the number of rows actually committed.
 
         Counted by an accumulator updated per-partition inside the
         foreachPartition action — accumulator updates in ACTIONS are
@@ -198,86 +232,43 @@ class CopySink:
         assert_safe_column_names(columns)
         if truncate:
             self._execute_truncate(table)
-        rendered = copy_lines(df)
+        rendered = self.render(df)
         if self.num_writers:
             rendered = rendered.repartition(self.num_writers)
-        dsn, batch_size, timeout_s = self.dsn, self.batch_size, self.timeout_s
-        factory = self.connection_factory
+        write_partition = self.write_partition
+        opts = dict(
+            dsn=self.dsn, table=table, columns=columns, batch_size=self.batch_size,
+            timeout_s=self.timeout_s, connection_factory=self.connection_factory,
+        )
         rows_acc = df.sparkSession.sparkContext.accumulator(0)
 
         def run(partition) -> None:
-            rows_acc.add(
-                copy_partition(
-                    (row.line for row in partition),
-                    dsn=dsn,
-                    table=table,
-                    columns=columns,
-                    batch_size=batch_size,
-                    timeout_s=timeout_s,
-                    connection_factory=factory,
-                )
-            )
+            rows_acc.add(write_partition(partition, **opts))
 
         rendered.foreachPartition(run)
         return int(rows_acc.value)
 
-    def write_binary(self, df: DataFrame, table: str, truncate: bool = False) -> int:
-        """Write via PostgreSQL's BINARY COPY format and return rows
-        written.  Typed wire encoding (sinks/copy_binary.py): numeric
-        columns leave as whole-array byte swaps instead of per-value
-        text rendering, and the server skips its text parsers —
-        measured at 0.78-0.87x the text path on lineitem (BASELINE.md;
-        the value is type FIDELITY, not throughput).  Schema-gated:
-        columns
-        binary COPY can't encode (decimals, intervals, nested) raise
-        up front with the fallback spelled out (the text ``write``
-        renders everything).  Same partition/transaction contract as
-        the text path: one writer per partition, batch_size-row
-        transactions, at-least-once under task retry.  NOTE:
-        write_atomic / write_idempotent are TEXT-format paths (their
-        per-partition ledger transactions render COPY lines
-        internally) — they do not currently compose with the binary
-        encoding, so exactly-once loads forgo binary's type fidelity
-        until a binary ledger path exists."""
-        import pyspark.sql.functions as F
+    def _execute_truncate(self, table: str) -> None:
+        # Driver-side, once, before any writer starts
+        # (ParquetImporter.php:50-52).
+        conn = self.connection_factory(self.dsn)
+        try:
+            cur = conn.cursor()
+            cur.execute(f"TRUNCATE TABLE {quote_identifier(table)}")
+            conn.commit()
+        finally:
+            conn.close()
 
-        from parquet_to_sql_spark.sinks.copy_binary import (
-            copy_binary_partition,
-            unsupported_columns,
-        )
 
-        assert_safe_table_name(table)
-        columns = list(df.columns)
-        assert_safe_column_names(columns)
-        bad = unsupported_columns(df)
-        if bad:
-            raise TypeError(
-                f"binary COPY cannot encode columns {bad} "
-                "(decimal/interval/nested); use the text sink's write()"
-            )
-        if truncate:
-            self._execute_truncate(table)
-        src = df.repartition(self.num_writers) if self.num_writers else df
-        dsn, batch_size, timeout_s = self.dsn, self.batch_size, self.timeout_s
-        factory = self.connection_factory
+class CopySink(PgBatchSink):
+    """COPY text sink: ``write`` plus the exactly-once
+    ``write_idempotent`` / ``write_atomic`` paths."""
 
-        def run(batches):
-            import pyarrow as pa
+    render = staticmethod(copy_lines)
 
-            n = copy_binary_partition(
-                batches,
-                dsn=dsn,
-                table=table,
-                columns=columns,
-                batch_size=batch_size,
-                timeout_s=timeout_s,
-                connection_factory=factory,
-            )
-            yield pa.RecordBatch.from_pydict({"n_rows": [n]})
-
-        counted = src.mapInArrow(run, "n_rows long")
-        total = counted.agg(F.sum("n_rows").alias("s")).collect()[0].s
-        return int(total or 0)
+    @staticmethod
+    def write_partition(partition, **opts) -> int:
+        return copy_partition((row.line for row in partition), **opts)
 
     def write_idempotent(self, df: DataFrame, table: str, batch_id: int) -> int:
         """Exactly-once streaming micro-batch ingest, DISTRIBUTED: each
@@ -465,28 +456,3 @@ class CopySink:
             pass
         finally:
             conn.close()
-
-    def _execute_truncate(self, table: str) -> None:
-        # Driver-side, once, before any writer starts
-        # (ParquetImporter.php:50-52).
-        conn = self.connection_factory(self.dsn)
-        try:
-            cur = conn.cursor()
-            cur.execute(f"TRUNCATE TABLE {quote_identifier(table)}")
-            conn.commit()
-        finally:
-            conn.close()
-
-
-class BinaryCopySink(CopySink):
-    """CopySink whose ``write`` speaks the BINARY COPY wire format
-    (sinks/copy_binary.py) — the type-fidelity variant for schemas
-    binary can encode; raises up front (naming the text fallback) on
-    decimal/interval/nested columns.  Same constructor, identifiers,
-    truncate, and transaction contract as the text sink.  Inherited
-    ``write_atomic`` / ``write_idempotent`` still speak TEXT format
-    (they render lines inside their ledger transactions) — only
-    ``write`` is binary on this class."""
-
-    def write(self, df: DataFrame, table: str, truncate: bool = False) -> int:
-        return self.write_binary(df, table, truncate=truncate)

@@ -19,6 +19,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import DataFrame
 
+from parquet_to_sql_spark.config import DEFAULT_BATCH_SIZE
 from parquet_to_sql_spark.identifiers import (
     assert_safe_column_names,
     assert_safe_table_name,
@@ -28,7 +29,7 @@ from parquet_to_sql_spark.normalize import normalize_for_insert
 
 
 class DuckDbSink:
-    def __init__(self, database: str, batch_size: int = 5000):
+    def __init__(self, database: str, batch_size: int = DEFAULT_BATCH_SIZE):
         self.database = database
         self.batch_size = batch_size
 

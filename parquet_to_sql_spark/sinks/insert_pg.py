@@ -28,18 +28,13 @@ import math
 from decimal import Decimal
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame
-
-from parquet_to_sql_spark.identifiers import (
-    assert_safe_column_names,
-    assert_safe_table_name,
-    quote_identifier,
-)
+from parquet_to_sql_spark.config import DEFAULT_BATCH_SIZE, DEFAULT_COPY_TIMEOUT
+from parquet_to_sql_spark.identifiers import quote_identifier
 from parquet_to_sql_spark.normalize import normalize_for_insert
 from parquet_to_sql_spark.sinks.copy_pg import (
-    DEFAULT_BATCH_SIZE,
-    DEFAULT_TIMEOUT_S,
+    PgBatchSink,
     _default_connection_factory,
+    batch_partition,
 )
 
 
@@ -81,103 +76,37 @@ def insert_partition(
     timeout_s: int,
     connection_factory: Callable[[str], object],
 ) -> int:
-    """Write one partition via multi-row INSERTs, batch_size rows per
-    transaction (the reference's flush loop, ParquetImporter.php:56-71
-    with the :123-125 fallback body).  Returns rows COMMITTED; a
-    failed batch rolls back and raises, leaving prior batches in
-    place (per-batch atomicity, same as COPY)."""
-    quoted_table = quote_identifier(table)
-    col_list = ", ".join(quote_identifier(c) for c in columns)
-    conn = connection_factory(dsn)
-    written = 0
-    try:
-        batch: list[str] = []
+    """Write one partition via multi-row INSERTs, one statement per
+    batch_size-row transaction (batch_partition, with the reference's
+    :123-125 fallback body).  Returns rows COMMITTED."""
+    head = (
+        f"INSERT INTO {quote_identifier(table)} "
+        f"({', '.join(quote_identifier(c) for c in columns)}) VALUES "
+    )
 
-        def flush(b: list[str]) -> int:
-            if not b:
-                return 0
-            cur = conn.cursor()
-            try:
-                cur.execute(f"SET LOCAL statement_timeout = {int(timeout_s * 1000)}")
-                # sql_literal's quote-doubling framing requires it; a
-                # server/pooler configured with scs=off would otherwise
-                # let a trailing backslash escape the closing quote
-                cur.execute("SET LOCAL standard_conforming_strings = on")
-                cur.execute(
-                    f"INSERT INTO {quoted_table} ({col_list}) VALUES "
-                    + ", ".join(b)
-                )
-                conn.commit()
-                return len(b)
-            except Exception as exc:
-                conn.rollback()
-                raise RuntimeError(f"INSERT command failed: {exc}") from exc
-
-        for row in rows:
-            batch.append("(" + ", ".join(sql_literal(v) for v in row) + ")")
-            if len(batch) >= batch_size:
-                written += flush(batch)
-                batch = []
-        written += flush(batch)
-        return written
-    finally:
-        conn.close()
-
-
-class InsertSink:
-    """Bulk-INSERT sink with the CopySink surface (write/truncate)."""
-
-    def __init__(
-        self,
-        dsn: str,
-        batch_size: int = DEFAULT_BATCH_SIZE,
-        timeout_s: int = DEFAULT_TIMEOUT_S,
-        num_writers: int | None = None,
-        connection_factory: Callable[[str], object] | None = None,
-    ):
-        self.dsn = dsn
-        self.batch_size = batch_size
-        self.timeout_s = timeout_s
-        self.num_writers = num_writers
-        self.connection_factory = connection_factory or _default_connection_factory
-
-    def write(self, df: DataFrame, table: str, truncate: bool = False) -> int:
-        assert_safe_table_name(table)
-        columns = list(df.columns)
-        assert_safe_column_names(columns)
-        if truncate:
-            self._execute_truncate(table)
-        normalized = normalize_for_insert(df)
-        if self.num_writers:
-            normalized = normalized.repartition(self.num_writers)
-        dsn, batch_size, timeout_s = self.dsn, self.batch_size, self.timeout_s
-        factory = self.connection_factory
-        rows_acc = df.sparkSession.sparkContext.accumulator(0)
-
-        def run(partition) -> None:
-            rows_acc.add(
-                insert_partition(
-                    (tuple(row) for row in partition),
-                    dsn=dsn,
-                    table=table,
-                    columns=columns,
-                    batch_size=batch_size,
-                    timeout_s=timeout_s,
-                    connection_factory=factory,
-                )
+    def send(cur, batch: list[tuple]) -> None:
+        # sql_literal's quote-doubling framing requires it; a
+        # server/pooler configured with scs=off would otherwise
+        # let a trailing backslash escape the closing quote
+        cur.execute("SET LOCAL standard_conforming_strings = on")
+        cur.execute(
+            head
+            + ", ".join(
+                "(" + ", ".join(sql_literal(v) for v in row) + ")" for row in batch
             )
+        )
 
-        normalized.foreachPartition(run)
-        return int(rows_acc.value)
+    return batch_partition(
+        rows, dsn=dsn, batch_size=batch_size, timeout_s=timeout_s,
+        connection_factory=connection_factory, send=send, command="INSERT",
+    )
 
-    def _execute_truncate(self, table: str) -> None:
-        conn = self.connection_factory(self.dsn)
-        try:
-            cur = conn.cursor()
-            cur.execute(f"TRUNCATE TABLE {quote_identifier(table)}")
-            conn.commit()
-        finally:
-            conn.close()
+
+class InsertSink(PgBatchSink):
+    """Bulk-INSERT sink with the CopySink ``write``/truncate surface."""
+
+    render = staticmethod(normalize_for_insert)
+    write_partition = staticmethod(insert_partition)
 
 
 def supports_copy(conn) -> bool:
@@ -206,7 +135,7 @@ def supports_copy(conn) -> bool:
 def choose_sink(
     dsn: str,
     batch_size: int = DEFAULT_BATCH_SIZE,
-    timeout_s: int = DEFAULT_TIMEOUT_S,
+    timeout_s: int = DEFAULT_COPY_TIMEOUT,
     num_writers: int | None = None,
     connection_factory: Callable[[str], object] | None = None,
 ):

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 
+from parquet_to_sql_spark.config import DEFAULT_BATCH_SIZE
 from parquet_to_sql_spark.identifiers import (
     assert_safe_column_names,
     assert_safe_table_name,
@@ -25,7 +26,7 @@ class JdbcSink:
         self,
         url: str,
         properties: dict | None = None,
-        batch_size: int = 5000,  # reference default: config/parquet-to-sql.php:8
+        batch_size: int = DEFAULT_BATCH_SIZE,
         num_writers: int | None = None,
     ):
         self.url = url

@@ -10,6 +10,8 @@ sf0.1, 600k rows x 11 cols), and reports rows/s for:
     reference's sequential PHP loop (ParquetImporter.php:56-71)
 
 Usage:  python scripts/bench_copy_pg.py
+$SPARK_GRAFT_CPUS sets the Spark cores and the parallel writer count
+(default: the CPUs this process may run on).
 Prints one JSON line; exits non-zero if the server can't be booted.
 """
 
@@ -36,7 +38,7 @@ def main() -> int:
         print(json.dumps({"error": "no postgres server in environment"}))
         return 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
     sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
     from pyspark.sql import SparkSession
@@ -94,21 +96,6 @@ def main() -> int:
             dt = time.monotonic() - t0
             assert written == n, (written, n)
             results[label] = dt
-        # binary-format COPY (typed wire encoding, no server-side text
-        # parsing), same writer count as copy_parallel
-        conn = pg_wire.connect(dsn)
-        cur = conn.cursor()
-        cur.execute("DROP TABLE IF EXISTS lineitem_bench")
-        cur.execute(create_table_sql("lineitem_bench", df.schema))
-        conn.commit()
-        conn.close()
-        t0 = time.monotonic()
-        written = CopySink(dsn, num_writers=int(cpus)).write_binary(
-            df, "lineitem_bench"
-        )
-        dt = time.monotonic() - t0
-        assert written == n, (written, n)
-        results["copy_binary"] = dt
         check = pg_wire.connect(dsn)
         cur = check.cursor()
         cur.execute("SELECT count(*) FROM lineitem_bench")
@@ -124,13 +111,8 @@ def main() -> int:
                     "sf_dir": sf_dir,
                     "copy_parallel_sec": round(results["copy_parallel"], 3),
                     "copy_1writer_sec": round(results["copy_1writer"], 3),
-                    "copy_binary_sec": round(results["copy_binary"], 3),
-                    "binary_rows_per_sec": round(n / results["copy_binary"]),
                     "speedup_parallel_vs_1writer": round(
                         results["copy_1writer"] / results["copy_parallel"], 2
-                    ),
-                    "speedup_binary_vs_text": round(
-                        results["copy_parallel"] / results["copy_binary"], 2
                     ),
                 }
             )

@@ -22,6 +22,7 @@ from parquet_to_sql_spark.identifiers import (
 from parquet_to_sql_spark.importer import Importer, project_rename
 from parquet_to_sql_spark.normalize import copy_lines
 from parquet_to_sql_spark.sinks.copy_pg import CopySink, copy_partition
+from parquet_to_sql_spark.sinks.insert_pg import insert_partition
 from parquet_to_sql_spark.sinks.duckdb_sink import DuckDbSink
 from parquet_to_sql_spark.sources.parquet import ParquetSource
 
@@ -48,6 +49,8 @@ class FakeCursor:
 
     def execute(self, sql):
         self.log.append(("execute", sql))
+        if self.fail_copy and sql.startswith("INSERT"):
+            raise RuntimeError("boom")
 
     def copy(self, sql):
         self.log.append(("copy", sql))
@@ -98,21 +101,48 @@ def test_copy_protocol_exact_wire_format():
     assert log[-1] == ("close", None)
 
 
+# The two callers of the shared batch loop (copy_pg.batch_partition):
+# (writer, item i of its input, the log event that sends one batch,
+# the event the send of rows 10 and 11 logs, the error prefix).
+_BATCH_WRITERS = [
+    (
+        copy_partition,
+        lambda i: f"{i}\talice",
+        lambda e: e[0] == "copy",
+        ("copy_write", "11\talice\n"),
+        "COPY",
+    ),
+    (
+        insert_partition,
+        lambda i: (i, "alice"),
+        lambda e: e[0] == "execute" and e[1].startswith("INSERT"),
+        ("execute", 'INSERT INTO "t" ("id", "name") VALUES '
+                    "(10, 'alice'), (11, 'alice')"),
+        "INSERT",
+    ),
+]
+
+
 def test_copy_batching_one_txn_per_batch():
-    log = []
-    written = copy_partition(
-        iter(str(i) for i in range(12)),
-        dsn="d",
-        table="t",
-        columns=["v"],
-        batch_size=5,
-        timeout_s=300,
-        connection_factory=lambda dsn: FakeConn(log),
-    )
-    # 12 rows / batch 5 -> 3 COPY transactions (5,5,2)
-    assert log.count(("commit", None)) == 3
-    assert sum(1 for e in log if e[0] == "copy") == 3
-    assert written == 12
+    """Both callers of the shared loop: one transaction, statement
+    timeout and send per batch."""
+    for writer, item, is_send, last_send, _ in _BATCH_WRITERS:
+        log = []
+        written = writer(
+            iter(item(i) for i in range(12)),
+            dsn="d",
+            table="t",
+            columns=["id", "name"],
+            batch_size=5,
+            timeout_s=300,
+            connection_factory=lambda dsn: FakeConn(log),
+        )
+        # 12 rows / batch 5 -> 3 transactions (5,5,2)
+        assert log.count(("commit", None)) == 3
+        assert sum(1 for e in log if is_send(e)) == 3
+        assert log.count(("execute", "SET LOCAL statement_timeout = 300000")) == 3
+        assert last_send in log
+        assert written == 12
 
 
 def test_pg_wire_copy_frames_concatenate_to_exact_input():
@@ -149,21 +179,23 @@ def test_pg_wire_copy_frames_concatenate_to_exact_input():
 
 # ------------------------------------------------- 2. rollback path
 def test_copy_failure_rolls_back_and_wraps():
-    """Parity with tests/ParquetImporterTest.php:51-76."""
-    log = []
-    with pytest.raises(RuntimeError, match="COPY command failed: boom"):
-        copy_partition(
-            iter(["1\talice"]),
-            dsn="d",
-            table="users",
-            columns=["id", "name"],
-            batch_size=10,
-            timeout_s=5,
-            connection_factory=lambda dsn: FakeConn(log, fail_copy=True),
-        )
-    assert ("rollback", None) in log
-    assert ("commit", None) not in log
-    assert log[-1] == ("close", None)
+    """Parity with tests/ParquetImporterTest.php:51-76, for both
+    callers of the shared loop, each with its own error prefix."""
+    for writer, item, _, _, command in _BATCH_WRITERS:
+        log = []
+        with pytest.raises(RuntimeError, match=f"{command} command failed: boom"):
+            writer(
+                iter([item(1)]),
+                dsn="d",
+                table="users",
+                columns=["id", "name"],
+                batch_size=10,
+                timeout_s=5,
+                connection_factory=lambda dsn: FakeConn(log, fail_copy=True),
+            )
+        assert ("rollback", None) in log
+        assert ("commit", None) not in log
+        assert log[-1] == ("close", None)
 
 
 # --------------------------------- 3. normalization (INSERT fallback)
@@ -529,6 +561,17 @@ def test_cli_file_sink_lands_parquet_lake(spark, tmp_path, monkeypatch):
     back = spark.read.parquet(str(tmp_path / "lake" / "users"))
     assert result["rows_imported"] == back.count() == 150
     assert "user_id" in back.columns and "c_custkey" not in back.columns
+
+    # without --sink and --connection the CLI falls back to the
+    # PARQUET_TO_SQL_* environment (no config file in the cwd)
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv("PARQUET_TO_SQL_CONFIG", raising=False)
+    monkeypatch.setenv("PARQUET_TO_SQL_SINK", "file")
+    monkeypatch.setenv("PARQUET_TO_SQL_CONNECTION", str(tmp_path / "env_lake"))
+    rc = cli.main(["/root/testdata/sf0.001/customer.parquet", "users"])
+    assert rc == 0
+    back = spark.read.parquet(str(tmp_path / "env_lake" / "users"))
+    assert json.loads(out[-1])["rows_imported"] == back.count() == 150
 
 
 def test_avro_source_roundtrip_all_types(spark, tmp_path):

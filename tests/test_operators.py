@@ -1265,78 +1265,6 @@ def test_bpe_train_merges_learns_known_table(spark):
     assert final == {"abab": 1, "abc": 1}
 
 
-def test_binary_copy_encoding_golden_bytes():
-    """The PGCOPY binary tuple encoding against hand-packed expected
-    bytes — every supported type, with NULLs, including the PG-epoch
-    shifts for timestamp (2000-01-01 in microseconds) and date
-    (days)."""
-    import datetime
-    import struct
-
-    import pyarrow as pa
-
-    from parquet_to_sql_spark.sinks.copy_binary import (
-        BINARY_HEADER,
-        BINARY_TRAILER,
-        encode_rows,
-    )
-
-    batch = pa.RecordBatch.from_pydict(
-        {
-            "i2": pa.array([7, None], pa.int16()),
-            "i4": pa.array([-5, 2], pa.int32()),
-            "i8": pa.array([1_234_567_890_123, None], pa.int64()),
-            "f8": pa.array([1.5, None], pa.float64()),
-            "b": pa.array([True, False], pa.bool_()),
-            "s": pa.array(["héllo", None], pa.string()),
-            "by": pa.array([b"\x00\x01", None], pa.binary()),
-            "ts": pa.array(
-                [datetime.datetime(2000, 1, 1, 0, 0, 1), None], pa.timestamp("us")
-            ),
-            "d": pa.array([datetime.date(2000, 1, 2), None], pa.date32()),
-        }
-    )
-    rows = list(encode_rows(batch))
-    assert len(rows) == 2
-
-    def f(payload: bytes) -> bytes:
-        return struct.pack(">i", len(payload)) + payload
-
-    null = struct.pack(">i", -1)
-    row0 = struct.pack(">h", 9) + b"".join(
-        [
-            f(struct.pack(">h", 7)),
-            f(struct.pack(">i", -5)),
-            f(struct.pack(">q", 1_234_567_890_123)),
-            f(struct.pack(">d", 1.5)),
-            f(b"\x01"),
-            f("héllo".encode()),
-            f(b"\x00\x01"),
-            f(struct.pack(">q", 1_000_000)),  # 1 s past the PG epoch
-            f(struct.pack(">i", 1)),  # 1 day past the PG epoch
-        ]
-    )
-    row1 = struct.pack(">h", 9) + b"".join(
-        [null, f(struct.pack(">i", 2)), null, null, f(b"\x00"),
-         null, null, null, null]
-    )
-    assert rows[0] == row0
-    assert rows[1] == row1
-    # framing constants straight from the COPY docs
-    assert BINARY_HEADER == b"PGCOPY\n\xff\r\n\x00" + b"\x00" * 8
-    assert BINARY_TRAILER == b"\xff\xff"
-
-
-def test_binary_copy_rejects_unsupported_schema(spark):
-    from parquet_to_sql_spark.sinks.copy_binary import unsupported_columns
-
-    df = spark.sql(
-        "SELECT 1 AS ok_int, CAST(1.5 AS DECIMAL(10,2)) AS bad_dec, "
-        "array(1, 2) AS bad_arr, 'x' AS ok_str"
-    )
-    assert unsupported_columns(df) == ["bad_dec", "bad_arr"]
-
-
 def test_cap_per_domain_matches_bruteforce(spark):
     """The over-cap-only-shuffle quota screen vs a sequential
     reference on random skewed domain distributions: rows in under-cap

@@ -97,35 +97,40 @@ def test_copy_sink_roundtrips_every_rendering_branch(spark, pg_dsn):
     """One row per rendering branch of normalize.copy_value, verified
     by reading the live table back: strings with COPY specials, null,
     bool -> 1/0, timestamp micro+offset format, nested -> JSON(B),
-    binary -> bytea hex, decimal/double passthrough."""
+    binary -> bytea hex, decimal/double/float/smallint/bigint/date
+    passthrough."""
     df = spark.createDataFrame(
         [
             (
                 1, "plain", True,
                 "2024-01-02 03:04:05.123456",
                 {"k": "v"}, [1, 2, 3], bytearray(b"\x00\xffA"),
-                "12345.67", 2.5,
+                "12345.67", 2.5, -7, 1_234_567_890_123, "2024-03-01", 0.25,
             ),
             (
-                2, "tab\there nl\nthere back\\slash é", False,
-                None, None, None, None, None, None,
+                2, "tab\there nl\nthere back\\slash é \\N", False,
+                None, None, None, None, None, None, None, None, None, None,
             ),
         ],
         "id int, s string, flag boolean, ts string, meta map<string,string>, "
-        "tags array<int>, payload binary, d string, n double",
+        "tags array<int>, payload binary, d string, n double, i2 smallint, "
+        "i8 bigint, dt string, f4 float",
     ).select(
         "id", "s", "flag",
         F.col("ts").cast("timestamp").alias("ts"),
         "meta", "tags", "payload",
         F.col("d").cast("decimal(10,2)").alias("d"),
-        "n",
+        "n", "i2", "i8",
+        F.col("dt").cast("date").alias("dt"),
+        "f4",
     )
     _exec(
         pg_dsn,
         "DROP TABLE IF EXISTS roundtrip",
         """CREATE TABLE roundtrip (
              id int, s text, flag boolean, ts timestamptz, meta jsonb,
-             tags jsonb, payload bytea, d numeric(10,2), n float8)""",
+             tags jsonb, payload bytea, d numeric(10,2), n float8,
+             i2 smallint, i8 bigint, dt date, f4 float4)""",
     )
     written = CopySink(pg_dsn).write(df, "roundtrip")
     assert written == 2
@@ -135,17 +140,56 @@ def test_copy_sink_roundtrips_every_rendering_branch(spark, pg_dsn):
         """SELECT id::text, s, flag::text,
                   to_char(ts AT TIME ZONE 'UTC', 'YYYY-MM-DD HH24:MI:SS.US'),
                   meta::text, tags::text, encode(payload, 'hex'),
-                  d::text, n::text
+                  d::text, n::text, i2::text, i8::text, dt::text, f4::text
            FROM roundtrip ORDER BY id""",
     )
     assert rows[0] == (
         "1", "plain", "true", "2024-01-02 03:04:05.123456",
         '{"k": "v"}', "[1, 2, 3]", "00ff41", "12345.67", "2.5",
+        "-7", "1234567890123", "2024-03-01", "0.25",
     )
     assert rows[1] == (
-        "2", "tab\there nl\nthere back\\slash é", "false",
-        None, None, None, None, None, None,
+        "2", "tab\there nl\nthere back\\slash é \\N", "false",
+        None, None, None, None, None, None, None, None, None, None,
     )
+
+
+# Doubles whose text form is hardest to round-trip: shortest-repr
+# fractions, signed zero, the smallest subnormal and normal, the
+# largest finite, the non-finite values, and float4's own extremes.
+_HARD_FLOATS = [
+    0.1, 1 / 3, -0.0, 4.9e-324, 2.2250738585072014e-308,
+    1.7976931348623157e308, float("nan"), float("inf"), float("-inf"),
+    1.2345678912345679e8, 1.0e-7, 1.4e-45, 3.4028235e38,
+]
+
+
+def test_copy_sink_floats_are_bit_exact(spark, pg_dsn):
+    """The text COPY path lands every hard float8 and float4 value
+    bit-exactly: the server's float8send/float4send bytes equal the
+    IEEE bytes of the value Spark held (float4 from Spark's own
+    double -> float cast, so out-of-range doubles become 0 or inf)."""
+    import struct
+
+    df = spark.createDataFrame(
+        list(enumerate(_HARD_FLOATS)), "id int, f8 double"
+    ).withColumn("f4", F.col("f8").cast("float"))
+    _exec(
+        pg_dsn,
+        "DROP TABLE IF EXISTS float_bits",
+        "CREATE TABLE float_bits (id int, f8 float8, f4 float4)",
+    )
+    assert CopySink(pg_dsn).write(df, "float_bits") == len(_HARD_FLOATS)
+    want = [
+        (str(i), struct.pack(">d", f8).hex(), struct.pack(">f", f4).hex())
+        for i, f8, f4 in sorted(df.collect())
+    ]
+    got = _exec(
+        pg_dsn,
+        "SELECT id::text, encode(float8send(f8), 'hex'), "
+        "encode(float4send(f4), 'hex') FROM float_bits ORDER BY float_bits.id",
+    )
+    assert got == want
 
 
 def test_copy_failed_batch_commits_prior_batches(spark, pg_dsn):
@@ -678,104 +722,3 @@ def test_copy_from_only_driver_gets_working_fast_path(spark, pg_dsn):
         pg_dsn, 'SELECT count(*)::text, min("Vee"), max("Vee") FROM pg2_copy_from'
     )
     assert rows == [("25", "v1", "v9")]
-
-
-def test_binary_copy_roundtrips_typed_values(spark, pg_dsn):
-    """BINARY-format COPY against the live server: every supported
-    type incl. NULLs and COPY-special characters (which binary needs
-    no escaping for), read back and compared value-for-value against
-    the same table loaded by the TEXT sink — two wire formats, one
-    result."""
-    df = spark.createDataFrame(
-        [
-            (
-                1, 7, 1_234_567_890_123, 2.5, True,
-                "tab\there nl\nthere back\\slash é \\N",
-                bytearray(b"\x00\xffA"),
-                "2024-01-02 03:04:05.123456", "2024-03-01",
-            ),
-            (2, None, None, None, None, None, None, None, None),
-        ],
-        "id int, i2 smallint, i8 bigint, f8 double, flag boolean, "
-        "s string, payload binary, ts string, d string",
-    ).select(
-        "id", "i2", "i8", "f8", "flag", "s", "payload",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("d").cast("date").alias("d"),
-    )
-    ddl = """CREATE TABLE {t} (
-        id int, i2 smallint, i8 bigint, f8 float8, flag boolean,
-        s text, payload bytea, ts timestamptz, d date)"""
-    _exec(pg_dsn, "DROP TABLE IF EXISTS bin_rt", ddl.format(t="bin_rt"))
-    _exec(pg_dsn, "DROP TABLE IF EXISTS txt_rt", ddl.format(t="txt_rt"))
-
-    written = CopySink(pg_dsn).write_binary(df, "bin_rt")
-    assert written == 2
-    assert CopySink(pg_dsn).write(df, "txt_rt") == 2
-
-    sel = (
-        "SELECT id::text, i2::text, i8::text, f8::text, flag::text, s, "
-        "encode(payload, 'hex'), "
-        "to_char(ts AT TIME ZONE 'UTC', 'YYYY-MM-DD HH24:MI:SS.US'), "
-        "d::text FROM {t} ORDER BY id"
-    )
-    got = _exec(pg_dsn, sel.format(t="bin_rt"))
-    want = _exec(pg_dsn, sel.format(t="txt_rt"))
-    assert got == want and len(got) == 2
-
-
-def test_binary_copy_failed_batch_commits_prior_batches(spark, pg_dsn):
-    """Per-batch transaction parity with the text sink: a violation in
-    a later batch must keep earlier batches committed and raise."""
-    _exec(
-        pg_dsn,
-        "DROP TABLE IF EXISTS bin_batches",
-        "CREATE TABLE bin_batches (id bigint CHECK (id < 15))",
-    )
-    df = spark.range(0, 20).coalesce(1)  # ids 0..19, one partition
-    sink = CopySink(pg_dsn, batch_size=5)
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        sink.write_binary(df, "bin_batches")
-    n = _exec(pg_dsn, "SELECT COUNT(*)::text FROM bin_batches")[0][0]
-    # batches of 5 over a range: the batch containing id 15 fails,
-    # every batch before it is committed
-    assert n == "15"
-
-
-def test_binary_copy_rejects_decimal_schema(spark, pg_dsn):
-    df = spark.sql("SELECT CAST(1.5 AS DECIMAL(10,2)) AS d")
-    import pytest as _pytest
-
-    with _pytest.raises(TypeError, match="text sink"):
-        CopySink(pg_dsn).write_binary(df, "never_created")
-
-
-def test_binary_sink_kind_dispatch_and_cli_live(spark, pg_dsn):
-    """The 'copy-binary' sink kind: config dispatch returns the binary
-    variant, and an Importer run through it lands typed rows on the
-    live server."""
-    from parquet_to_sql_spark.config import build_sink, load_config
-    from parquet_to_sql_spark.sinks.copy_pg import BinaryCopySink
-
-    from parquet_to_sql_spark.sinks.ddl import create_table_sql
-
-    cfg = load_config(connection=pg_dsn, sink="copy-binary")
-    sink = build_sink(cfg)
-    assert isinstance(sink, BinaryCopySink)
-
-    df = spark.read.parquet(f"{SF_TINY}/region.parquet").select(
-        "r_regionkey", "r_name"
-    )
-    # binary COPY is width-exact: DDL must come from the df schema
-    # (r_regionkey is int32 -> PG integer, NOT bigint)
-    _exec(
-        pg_dsn,
-        "DROP TABLE IF EXISTS bin_sink_kind",
-        create_table_sql("bin_sink_kind", df.schema),
-    )
-    written = sink.write(df, "bin_sink_kind")
-    assert written == df.count()
-    rows = _exec(pg_dsn, "SELECT r_regionkey::text, r_name FROM bin_sink_kind ORDER BY 1")
-    assert len(rows) == written and rows[0][1]
