@@ -37,13 +37,31 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
+import pyspark.sql.functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from parquet_to_sql_spark.catalog import load_table  # noqa: E402
 from parquet_to_sql_spark.normalize import copy_lines  # noqa: E402
+from parquet_to_sql_spark.operators.gif import gif_decode, gif_encode  # noqa: E402
+from parquet_to_sql_spark.operators.jpeg import (  # noqa: E402
+    jpeg_decode,
+    jpeg_encode,
+    jpeg_encode_progressive,
+)
+from parquet_to_sql_spark.operators.png import png_decode, png_encode  # noqa: E402
+from parquet_to_sql_spark.operators.vp8l import (  # noqa: E402
+    vp8l_encode,
+    webp_decode,
+    webp_wrap_vp8l,
+)
 from parquet_to_sql_spark.queries.registry import all_queries  # noqa: E402
 from parquet_to_sql_spark.session import get_spark  # noqa: E402
 
@@ -62,234 +80,108 @@ def import_render_lineitem(spark, sf_dir):
     repartition(n)) keeps it AQE-managed: coalesced or split to the
     advisory partition size at any input scale instead of pinning a
     local-fixture width."""
-    import pyspark.sql.functions as F
-
     return copy_lines(load_table(spark, sf_dir, "lineitem").hint("rebalance")).agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(F.length("line")).alias("total_bytes"),
     )
 
 
-def multimodal_png_decode_throughput(spark, sf_dir):
-    """Decode-throughput probe (VERDICT r09 "what's wrong" #2): the
-    real media decoders are the only CPU-bound per-byte Python stages
-    in the repo, so an unnoticed 10x regression would hide from the
-    query-engine-shaped headliners.  Encodes + decodes 512 fixed
-    128x128 RGB PNGs (~25 MB of pixels, filter type cycling over all
-    five) inside mapInPandas — the same executor-side path as the
-    gate query, at sizes where throughput, not per-asset overhead,
-    dominates.  Fixed work independent of sf: this row tracks MB/s of
-    the codec, not data scale."""
-    from typing import Iterator
+def _png(i, w, h):
+    k = np.arange(w * h * 3, dtype=np.uint32)
+    px = ((k * 7 + i * 31) % 256).astype(np.uint8).tobytes()
+    return px, png_encode(w, h, px, 3, filter_type=i % 5)
 
-    import pandas as pd
 
-    n_img, w, h = 512, 128, 128
+def _gray(i, w, h):
+    k = np.arange(w * h, dtype=np.uint32)
+    return ((k // 64 * 11 + i * 31) % 256).astype(np.uint8).tobytes()
+
+
+def _jpeg(i, w, h):
+    px = _gray(i, w, h)
+    return px, jpeg_encode(w, h, px, 1, quant=8)
+
+
+def _jpeg_progressive(i, w, h):
+    px = _gray(i, w, h)
+    return px, jpeg_encode_progressive(w, h, px, 1, quant=8)
+
+
+def _gif(i, w, h):
+    pal = [bytes(((k * 7 + i) % 256, (k * 11) % 256, k)) for k in range(256)]
+    k = np.arange(w * h, dtype=np.uint32)
+    idx = ((k // 16 * 7 + (k * 131 + i * 31) % 8) % 256).astype(np.uint8).tobytes()
+    return idx, gif_encode(w, h, idx, pal)
+
+
+def _webp_lossless(i, w, h):
+    k = np.arange(w * h * 4, dtype=np.uint32)
+    px = ((k * 13 + i * 31) % 256).astype(np.uint8).tobytes()
+    return px, webp_wrap_vp8l(vp8l_encode(w, h, px, transforms=("subtract_green",)))
+
+
+def _exact(out, px, w, h):
+    return out == px
+
+
+def _same_len(out, px, w, h):
+    return len(out) == len(px)
+
+
+def _rgb_len(out, px, w, h):
+    return len(out) == w * h * 3
+
+
+# Decode-throughput probes: the media decoders are the only CPU-bound
+# per-byte Python stages in the repo, so an unnoticed 10x regression
+# would hide from the query-engine-shaped headliners.  Each row
+# encodes + decodes n_img fixed w x h images inside mapInPandas (the
+# gate queries' executor-side path) at sizes where codec throughput,
+# not per-asset overhead, dominates; the work is independent of sf.
+# Row: (n_img, w, h, make(i, w, h) -> (pixels, payload), decode, ok).
+CODEC_PROBES = {
+    # RGB, the filter type cycles over all five (~25 MB of pixels)
+    "multimodal_png_decode_throughput": (512, 128, 128, _png, png_decode, _exact),
+    # grayscale baseline; entropy decode is JPEG's ceiling (~2.3 MB)
+    "multimodal_jpeg_decode_throughput": (256, 96, 96, _jpeg, jpeg_decode, _same_len),
+    # 256-colour, blocky-plus-noise so the LZW table grows and clears
+    # realistically (~12.5 MB of decoded RGB)
+    "multimodal_gif_decode_throughput": (256, 128, 128, _gif, gif_decode, _rgb_len),
+    # RGBA VP8L through the full container: up to four prefix symbols
+    # per pixel, so its own (lower) MB/s (~2.1 MB)
+    "multimodal_webp_lossless_decode_throughput": (
+        128, 64, 64, _webp_lossless, webp_decode, _exact,
+    ),
+    # SOF2 with the default 6-scan grayscale script: several per-bit
+    # passes over the coefficients, so its own (lower) MB/s
+    "multimodal_jpeg_progressive_decode_throughput": (
+        256, 96, 96, _jpeg_progressive, jpeg_decode, _same_len,
+    ),
+}
+
+
+def codec_probe(n_img, w, h, make, decode, ok):
+    """A bench builder that encodes + decodes images 0..n_img-1 and
+    returns (n_ok, px_bytes)."""
 
     def enc_dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from parquet_to_sql_spark.operators.png import png_decode, png_encode
-
         for pdf in batches:
-            ok = 0
-            px_bytes = 0
+            n_ok = px_bytes = 0
             for i in pdf["id"]:
-                i = int(i)
-                base = np.arange(w * h * 3, dtype=np.uint32)
-                px = ((base * 7 + i * 31) % 256).astype(np.uint8).tobytes()
-                payload = png_encode(w, h, px, 3, filter_type=i % 5)
-                _, _, _, out = png_decode(payload)
-                ok += out == px
+                px, payload = make(int(i), w, h)
+                out = decode(payload)[3]
+                n_ok += ok(out, px, w, h)
                 px_bytes += len(out)
-            yield pd.DataFrame({"ok": [ok], "px_bytes": [px_bytes]})
+            yield pd.DataFrame({"ok": [n_ok], "px_bytes": [px_bytes]})
 
-    import pyspark.sql.functions as F
-
-    return (
-        spark.range(0, n_img, 1, 32)
-        .mapInPandas(enc_dec, schema="ok long, px_bytes long")
-        .agg(F.sum("ok").alias("n_ok"), F.sum("px_bytes").alias("px_bytes"))
-    )
-
-
-def multimodal_jpeg_decode_throughput(spark, sf_dir):
-    """JPEG twin of the PNG decode probe: encodes + decodes 256 fixed
-    96x96 grayscale baseline JPEGs (~2.3 MB of pixels; entropy decode
-    is the JPEG-side ceiling the way unfiltering is PNG's).  Fixed
-    work independent of sf."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    n_img, w, h = 256, 96, 96
-
-    def enc_dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from parquet_to_sql_spark.operators.jpeg import jpeg_decode, jpeg_encode
-
-        for pdf in batches:
-            ok = 0
-            px_bytes = 0
-            for i in pdf["id"]:
-                i = int(i)
-                base = np.arange(w * h, dtype=np.uint32)
-                px = ((base // 64 * 11 + i * 31) % 256).astype(np.uint8).tobytes()
-                payload = jpeg_encode(w, h, px, 1, quant=8)
-                _, _, _, out = jpeg_decode(payload)
-                ok += len(out) == len(px)
-                px_bytes += len(out)
-            yield pd.DataFrame({"ok": [ok], "px_bytes": [px_bytes]})
-
-    import pyspark.sql.functions as F
-
-    return (
-        spark.range(0, n_img, 1, 32)
-        .mapInPandas(enc_dec, schema="ok long, px_bytes long")
-        .agg(F.sum("ok").alias("n_ok"), F.sum("px_bytes").alias("px_bytes"))
-    )
-
-
-def multimodal_jpeg_progressive_decode_throughput(spark, sf_dir):
-    """Progressive (SOF2) twin of the JPEG decode probe: encodes +
-    decodes 256 fixed 96x96 grayscale PROGRESSIVE JPEGs with the
-    default spectral-selection + successive-approximation script (6
-    scans for grayscale).  The progressive path decodes each scan
-    through the canonical per-bit reader — inherently several passes
-    over the coefficients versus baseline's single multi-symbol LUT
-    pass — so this row pins its own honest (lower) MB/s rather than
-    letting it hide behind the baseline row.  Fixed work independent
-    of sf."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    n_img, w, h = 256, 96, 96
-
-    def enc_dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from parquet_to_sql_spark.operators.jpeg import (
-            jpeg_decode,
-            jpeg_encode_progressive,
+    def build(spark, sf_dir):
+        return (
+            spark.range(0, n_img, 1, 32)
+            .mapInPandas(enc_dec, schema="ok long, px_bytes long")
+            .agg(F.sum("ok").alias("n_ok"), F.sum("px_bytes").alias("px_bytes"))
         )
 
-        for pdf in batches:
-            ok = 0
-            px_bytes = 0
-            for i in pdf["id"]:
-                i = int(i)
-                base = np.arange(w * h, dtype=np.uint32)
-                px = ((base // 64 * 11 + i * 31) % 256).astype(np.uint8).tobytes()
-                payload = jpeg_encode_progressive(w, h, px, 1, quant=8)
-                _, _, _, out = jpeg_decode(payload)
-                ok += len(out) == len(px)
-                px_bytes += len(out)
-            yield pd.DataFrame({"ok": [ok], "px_bytes": [px_bytes]})
-
-    import pyspark.sql.functions as F
-
-    return (
-        spark.range(0, n_img, 1, 32)
-        .mapInPandas(enc_dec, schema="ok long, px_bytes long")
-        .agg(F.sum("ok").alias("n_ok"), F.sum("px_bytes").alias("px_bytes"))
-    )
-
-
-def multimodal_gif_decode_throughput(spark, sf_dir):
-    """GIF twin of the decode probes (round 13): encodes + decodes
-    256 fixed 128x128 256-color GIFs (~12.5 MB of decoded RGB
-    pixels; LZW decompression is the GIF-side per-byte ceiling the
-    way entropy decode is JPEG's).  Content is blocky-plus-noise so
-    the LZW table exercises realistic growth/clear cycles rather
-    than degenerate runs.  Fixed work independent of sf: this row
-    tracks MB/s of the codec, not data scale."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    n_img, w, h = 256, 128, 128
-
-    def enc_dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from parquet_to_sql_spark.operators.gif import gif_decode, gif_encode
-
-        for pdf in batches:
-            ok = 0
-            px_bytes = 0
-            for i in pdf["id"]:
-                i = int(i)
-                pal = [
-                    bytes(((k * 7 + i) % 256, (k * 11) % 256, k))
-                    for k in range(256)
-                ]
-                base = np.arange(w * h, dtype=np.uint32)
-                idx = (
-                    (base // 16 * 7 + (base * 131 + i * 31) % 8) % 256
-                ).astype(np.uint8).tobytes()
-                payload = gif_encode(w, h, idx, pal)
-                _, _, _, out = gif_decode(payload)
-                ok += len(out) == w * h * 3
-                px_bytes += len(out)
-            yield pd.DataFrame({"ok": [ok], "px_bytes": [px_bytes]})
-
-    import pyspark.sql.functions as F
-
-    return (
-        spark.range(0, n_img, 1, 32)
-        .mapInPandas(enc_dec, schema="ok long, px_bytes long")
-        .agg(F.sum("ok").alias("n_ok"), F.sum("px_bytes").alias("px_bytes"))
-    )
-
-
-def multimodal_webp_lossless_decode_throughput(spark, sf_dir):
-    """VP8L twin of the decode probes (round 13): encodes + decodes
-    128 fixed 64x64 RGBA lossless WebPs (~2.1 MB of pixels) through
-    the full container path.  VP8L reads up to four prefix symbols
-    per pixel (green/red/blue/alpha), so its per-pixel cost is
-    inherently above the single-symbol codecs — this row pins its
-    own honest MB/s (root-table prefix decode, buffered bit reader)
-    rather than hiding it behind the other rows.  Fixed work
-    independent of sf."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    n_img, w, h = 128, 64, 64
-
-    def enc_dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from parquet_to_sql_spark.operators.vp8l import (
-            vp8l_encode,
-            webp_decode,
-            webp_wrap_vp8l,
-        )
-
-        for pdf in batches:
-            ok = 0
-            px_bytes = 0
-            for i in pdf["id"]:
-                i = int(i)
-                base = np.arange(w * h * 4, dtype=np.uint32)
-                px = ((base * 13 + i * 31) % 256).astype(np.uint8).tobytes()
-                payload = webp_wrap_vp8l(
-                    vp8l_encode(w, h, px, transforms=("subtract_green",))
-                )
-                _, _, _, out = webp_decode(payload)
-                ok += out == px
-                px_bytes += len(out)
-            yield pd.DataFrame({"ok": [ok], "px_bytes": [px_bytes]})
-
-    import pyspark.sql.functions as F
-
-    return (
-        spark.range(0, n_img, 1, 32)
-        .mapInPandas(enc_dec, schema="ok long, px_bytes long")
-        .agg(F.sum("ok").alias("n_ok"), F.sum("px_bytes").alias("px_bytes"))
-    )
+    return build
 
 
 def main() -> int:
@@ -305,20 +197,11 @@ def main() -> int:
     spark = get_spark(app_name="bench")
     headline = {n: q.build for n, q in sorted(all_queries().items()) if q.headline}
     headline["import_render_lineitem"] = import_render_lineitem
-    headline["multimodal_png_decode_throughput"] = multimodal_png_decode_throughput
-    headline["multimodal_jpeg_decode_throughput"] = multimodal_jpeg_decode_throughput
-    headline["multimodal_gif_decode_throughput"] = multimodal_gif_decode_throughput
-    headline["multimodal_webp_lossless_decode_throughput"] = (
-        multimodal_webp_lossless_decode_throughput
-    )
-    headline["multimodal_jpeg_progressive_decode_throughput"] = (
-        multimodal_jpeg_progressive_decode_throughput
-    )
+    headline.update({n: codec_probe(*row) for n, row in CODEC_PROBES.items()})
 
     # Layout twins: identical logical query over raw parquet vs tables
     # bucketed on the join key. Bucket materialization is load-time
     # work, so it happens here, OUTSIDE the timed loop.
-    from parquet_to_sql_spark.catalog import load_table as _lt
     from parquet_to_sql_spark.plans.bucketing import (
         materialize_bucketed,
         order_revenue_join,
@@ -326,7 +209,7 @@ def main() -> int:
 
     bucketed = materialize_bucketed(spark, sf_dir)
     headline["join_orderkey_shuffled"] = lambda s, d: order_revenue_join(
-        _lt(s, d, "orders"), _lt(s, d, "lineitem")
+        load_table(s, d, "orders"), load_table(s, d, "lineitem")
     )
     headline["join_orderkey_bucketed"] = lambda s, d: order_revenue_join(
         s.table(bucketed["orders"]), s.table(bucketed["lineitem"])
@@ -346,7 +229,6 @@ def main() -> int:
     # scan, unaffected by any operator/plan change in this repo.
     # Timed with the same rep discipline so host waves show up in the
     # artifact itself.
-    import pyspark.sql.functions as F
 
     def control(s):
         return s.range(0, 1 << 24, 1, 32).agg(F.sum("id").alias("s"))
@@ -370,12 +252,7 @@ def main() -> int:
             spark.catalog.clearCache()
     loadavg_end = [round(x, 2) for x in os.getloadavg()]
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
-    timings = {n: round(median(xs), 3) for n, xs in samples.items()}
+    timings = {n: round(statistics.median(xs), 3) for n, xs in samples.items()}
     spread = {n: [round(min(xs), 3), round(max(xs), 3)] for n, xs in samples.items()}
 
     total = round(sum(timings.values()), 3)
@@ -399,7 +276,7 @@ def main() -> int:
         "loadavg_start": loadavg_start,
         "loadavg_end": loadavg_end,
         "control": {
-            "median": round(median(control_samples), 3),
+            "median": round(statistics.median(control_samples), 3),
             "spread": [
                 round(min(control_samples), 3),
                 round(max(control_samples), 3),

@@ -7,7 +7,7 @@ Reference signature (ImportParquetCommand.php:10-17):
 Here:
   python -m parquet_to_sql_spark.cli PATH TABLE [--map src=dst ...]
       [--connection URL] [--batch N] [--timeout S] [--truncate]
-      [--sink {jdbc,copy,pg,duckdb,file}] [--format {parquet,csv,json,orc}]
+      [--sink {copy,pg,duckdb,file}] [--format {parquet,csv,json,orc}]
 
 Like the reference's options (ImportParquetCommand.php:24-26), an
 omitted --connection/--batch/--timeout/--sink falls back to the

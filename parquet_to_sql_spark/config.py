@@ -4,7 +4,7 @@ The reference publishes a user-editable config file whose every key
 falls back to an environment variable, then a default
 (config/parquet-to-sql.php:5-11, merged + published by
 ParquetToSqlServiceProvider.php:12-31). Same three keys here, same
-env-var names, plus the sink kind (the Spark engine has the five sinks
+env-var names, plus the sink kind (the Spark engine has the four sinks
 of SINK_KINDS where the reference has one connection abstraction).
 
 Precedence, highest first (documented contract):
@@ -15,7 +15,8 @@ Precedence, highest first (documented contract):
      PARQUET_TO_SQL_BATCH_SIZE, PARQUET_TO_SQL_COPY_TIMEOUT,
      PARQUET_TO_SQL_SINK)
   4. built-in defaults (batch 5000, timeout 300 s — the reference's
-     numbers; sink "jdbc" — the portable path)
+     numbers; sink "pg" — the reference's COPY with its batched-INSERT
+     fallback)
 
 Every default is defined here once; the sinks and the CLI import them.
 """
@@ -28,8 +29,8 @@ from dataclasses import asdict, dataclass
 
 DEFAULT_BATCH_SIZE = 5000  # config/parquet-to-sql.php:8
 DEFAULT_COPY_TIMEOUT = 300  # config/parquet-to-sql.php:11
-DEFAULT_SINK = "jdbc"
-SINK_KINDS = ("jdbc", "copy", "pg", "duckdb", "file")
+DEFAULT_SINK = "pg"
+SINK_KINDS = ("copy", "pg", "duckdb", "file")
 CONFIG_ENV = "PARQUET_TO_SQL_CONFIG"
 CONFIG_BASENAME = "parquet-to-sql.json"
 
@@ -125,6 +126,4 @@ def build_sink(cfg: EngineConfig, *, file_format: str = "parquet"):
         return choose_sink(
             cfg.connection, batch_size=cfg.batch_size, timeout_s=cfg.copy_timeout
         )
-    from parquet_to_sql_spark.sinks.jdbc import JdbcSink
-
-    return JdbcSink(cfg.connection, batch_size=cfg.batch_size)
+    raise ValueError(f"unknown sink kind {cfg.sink!r} ({'|'.join(SINK_KINDS)})")

@@ -72,10 +72,10 @@ class Importer:
         projected = project_rename(df, column_map)
         assert_safe_column_names(projected.columns)
 
-        # Sinks report rows ACTUALLY written (CopySink: accumulator in
-        # the foreachPartition action; DuckDbSink: insert count;
-        # JdbcSink: Observation on the write) — no second source scan,
-        # and the count reflects what landed, not what the source holds.
+        # Sinks report rows ACTUALLY written (CopySink / InsertSink:
+        # accumulator in the foreachPartition action; DuckDbSink:
+        # insert count) — no second source scan, and the count
+        # reflects what landed, not what the source holds.
         written = self.sink.write(projected, table, truncate=truncate)
         if written is not None:
             rows = int(written)

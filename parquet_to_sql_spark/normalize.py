@@ -53,20 +53,6 @@ def normalize_for_insert(df: DataFrame) -> DataFrame:
     )
 
 
-def normalize_nested_only(df: DataFrame) -> DataFrame:
-    """JSON-encode nested columns only, leaving scalars (incl.
-    timestamps) native — for typed writers (JDBC) that bind scalars
-    correctly and only choke on structs/arrays/maps."""
-    return df.select(
-        *[
-            (F.to_json(F.col(f.name)) if _is_nested(f.dataType) else F.col(f.name)).alias(
-                f.name
-            )
-            for f in df.schema.fields
-        ]
-    )
-
-
 def copy_escape(col: Column) -> Column:
     r"""Escape a string for the COPY text protocol: \ -> \\, TAB -> \t,
     CR -> \r, LF -> \n (ParquetImporter.php:173-178). Backslash first,

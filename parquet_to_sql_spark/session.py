@@ -9,8 +9,9 @@ Defaults are chosen for the 100 TB posture:
   * AQE on (runtime coalescing, skew-join splitting, dynamic join
     selection) so plans re-optimize from real statistics.
   * shuffle partitions sized for the local harness via
-    SPARK_GRAFT_CPUS; on a real cluster this is overridden (AQE
-    coalescing makes a too-high initial value cheap).
+    SPARK_GRAFT_CPUS (default: the CPUs this process may run on); on a
+    real cluster this is overridden (AQE coalescing makes a too-high
+    initial value cheap).
   * nanosAsLong so Parquet TIMESTAMP(NANOS) columns (the `events`
     fixture) are readable; catalog.load_table converts to a proper
     timestamp column.
@@ -41,6 +42,12 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def local_cpus() -> int:
+    """Cores of a local session: $SPARK_GRAFT_CPUS, else the CPUs this
+    process may run on.  The one default every script shares."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply engine confs to an externally-built session (best effort)."""
     for k, v in RUNTIME_CONFS.items():
@@ -59,11 +66,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to local[$SPARK_GRAFT_CPUS] (env, default 32).
+    ``master`` defaults to local[local_cpus()].
     On a cluster deployment the caller passes master/None and submits
     via spark-submit; nothing here is local-mode-specific.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master is None:
         from pyspark import SparkConf
 

@@ -9,17 +9,14 @@ Here, one class per sink kind of config.SINK_KINDS:
   * InsertSink    — the same per-partition batch loop sending
                     multi-row INSERTs (sinks/insert_pg.py); sink "pg"
                     probes the connection and picks CopySink or this
-  * JdbcSink      — Spark's native JDBC writer (batched INSERTs; the
-                    portable fallback, like the reference's) — "jdbc"
   * DuckDbSink    — driver-side batched INSERT into a local DuckDB
                     file; exercises the full normalize/batch/truncate
                     surface hermetically in tests — "duckdb"
   * FileSink      — partitioned/bucketed file lake — "file"
 """
 
-from parquet_to_sql_spark.sinks.jdbc import JdbcSink
 from parquet_to_sql_spark.sinks.copy_pg import CopySink
 from parquet_to_sql_spark.sinks.duckdb_sink import DuckDbSink
 from parquet_to_sql_spark.sinks.files import FileSink
 
-__all__ = ["JdbcSink", "CopySink", "DuckDbSink", "FileSink"]
+__all__ = ["CopySink", "DuckDbSink", "FileSink"]

@@ -9,7 +9,7 @@ Postgres server.
 DuckDB is single-writer, so rows stream through the driver via
 toLocalIterator (bounded memory: one partition at a time). That makes
 this sink a correctness harness, not the scale path — CopySink and
-JdbcSink are the cluster sinks; this one exists so the reference's
+InsertSink are the cluster sinks; this one exists so the reference's
 "fallback INSERT" behaviors (tests/ParquetImporterTest.php:78-119)
 stay pinned by executable tests.
 """

@@ -56,6 +56,6 @@ class Engine:
 
     def import_to(self, df_or_sql: DataFrame | str, table: str, sink) -> None:
         """Land a DataFrame or SQL result in a SQL table via any sink
-        (CopySink / JdbcSink / DuckDbSink)."""
+        (CopySink / InsertSink / DuckDbSink / FileSink)."""
         df = self.sql(df_or_sql) if isinstance(df_or_sql, str) else df_or_sql
         sink.write(df, table)

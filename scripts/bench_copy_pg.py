@@ -38,19 +38,21 @@ def main() -> int:
         print(json.dumps({"error": "no postgres server in environment"}))
         return 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
     sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
     from pyspark.sql import SparkSession
 
+    from parquet_to_sql_spark.session import local_cpus
     from parquet_to_sql_spark.sinks import pg_wire
     from parquet_to_sql_spark.sinks.copy_pg import CopySink
     from parquet_to_sql_spark.sinks.ddl import create_table_sql
 
+    cpus = local_cpus()
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("bench-copy-pg")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -84,7 +86,7 @@ def main() -> int:
         # shuffle partitions, 8 writers under-parallelized the sink
         # (r6 A/B: 8w 150k, 16w 163k, 32w 202k rows/s) — writers
         # follow the partition count
-        for label, writers in (("copy_1writer", 1), ("copy_parallel", int(cpus))):
+        for label, writers in (("copy_1writer", 1), ("copy_parallel", cpus)):
             conn = pg_wire.connect(dsn)
             cur = conn.cursor()
             cur.execute("DROP TABLE IF EXISTS lineitem_bench")

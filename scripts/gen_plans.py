@@ -1,9 +1,19 @@
 """Generate PLANS.md: the formatted physical plan of every headline
 query at sf0.001, annotated with shuffle/broadcast/codegen counts —
-the plan-review artifact for the 100 TB design audit."""
+the plan-review artifact for the 100 TB design audit.
+
+With query names, write each named query's formatted plan to
+``DIR/<name>_<S>.txt`` instead (the before/after dumps under plans/),
+at the same sf0.001 and 8 shuffle partitions.
+
+Usage:
+    python scripts/gen_plans.py                              # PLANS.md
+    python scripts/gen_plans.py NAME ... --out DIR --suffix S
+"""
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -17,8 +27,18 @@ from parquet_to_sql_spark.session import get_spark  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 
-def main() -> int:
-    spark = get_spark(app_name="gen-plans", shuffle_partitions=8)
+def dump(spark, names: list[str], out_dir: str, suffix: str) -> None:
+    qs = all_queries()
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        plan = formatted_plan(qs[name].build(spark, SF))
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(plan)
+        print(name, len(plan))
+        spark.catalog.clearCache()
+
+
+def write_plans_md(spark) -> None:
     out = [
         "# Headline-query physical plans",
         "",
@@ -50,9 +70,24 @@ def main() -> int:
     with open(path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {path}")
+
+
+def main(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(description="write PLANS.md, or per-query plan dumps")
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--out")
+    ap.add_argument("--suffix")
+    args = ap.parse_args(argv)
+    if args.names and not (args.out and args.suffix):
+        ap.error("query names need --out DIR and --suffix S")
+    spark = get_spark(app_name="gen-plans", shuffle_partitions=8)
+    if args.names:
+        dump(spark, args.names, args.out, args.suffix)
+    else:
+        write_plans_md(spark)
     spark.stop()
     return 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -30,11 +30,12 @@ def _api(port: int, path: str):
 
 def main(names: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pyspark.sql import SparkSession
 
-    from parquet_to_sql_spark.session import RUNTIME_CONFS
+    from parquet_to_sql_spark.session import RUNTIME_CONFS, local_cpus
+
+    cpus = local_cpus()
 
     builder = (
         SparkSession.builder.appName("profile")

@@ -100,7 +100,7 @@ def test_job_cli_runner_end_to_end(spark, tmp_path):
 # ------------------------------------------------------- config layer
 def test_config_defaults():
     cfg = load_config(path="/nonexistent/none.json")
-    assert cfg == EngineConfig(None, 5000, 300, "jdbc")
+    assert cfg == EngineConfig(None, 5000, 300, "pg")
 
 
 def test_config_env_fallback(monkeypatch):

@@ -347,15 +347,18 @@ def test_stream_import_exactly_once_into_live_postgres(spark, pg_dsn, tmp_path):
     assert _exec(pg_dsn, "SELECT count(*) FROM regions_stream") == [(str(n),)]
 
 
-def test_cli_copy_sink_live(spark, pg_dsn, capsys):
+def test_cli_copy_sink_live(spark, pg_dsn, capsys, monkeypatch):
     """The reference's CLI use case (`php artisan parquet:import`)
     against a real server: `parquet-import <file> <table> --sink copy
     --connection <dsn>` — the full argparse -> Importer -> COPY path,
-    result JSON on stdout."""
+    result JSON on stdout.  A second import given only the DSN (no
+    --sink) lands the rows through the default sink."""
     import json
 
     from parquet_to_sql_spark.cli import main
 
+    monkeypatch.delenv("PARQUET_TO_SQL_SINK", raising=False)
+    monkeypatch.setenv("PARQUET_TO_SQL_CONFIG", "/nonexistent/none.json")
     _exec(
         pg_dsn,
         "DROP TABLE IF EXISTS nations_cli",
@@ -363,12 +366,13 @@ def test_cli_copy_sink_live(spark, pg_dsn, capsys):
         "n_regionkey int)",
     )
     src = str(pathlib.Path(SF_TINY) / "nation.parquet")
-    rc = main([src, "nations_cli", "--sink", "copy", "--connection", pg_dsn])
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     n = spark.read.parquet(src).count()
-    assert out["rows_imported"] == n and out["table"] == "nations_cli"
-    assert _exec(pg_dsn, "SELECT count(*) FROM nations_cli") == [(str(n),)]
+    for i, sink_args in enumerate((["--sink", "copy"], [])):
+        rc = main([src, "nations_cli", *sink_args, "--connection", pg_dsn])
+        assert rc == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert out["rows_imported"] == n and out["table"] == "nations_cli"
+        assert _exec(pg_dsn, "SELECT count(*) FROM nations_cli") == [(str(n * (i + 1)),)]
 
 
 def test_insert_sink_roundtrips_normalized_values(spark, pg_dsn):

@@ -102,7 +102,7 @@ def test_committed_nl_cart_entries_are_sanctioned():
 
 
 def test_scaling_artifact_has_no_superlinear_queries():
-    """SCALING.json (scripts/scale_sweep.py --write) is the empirical
+    """SCALING.json (scripts/scale_evidence.py sf --write) is the empirical
     complement to the static plan gate: the committed snapshot must
     cover the headline set and record no query past the super-linear
     flag ratio on the 10x top step."""
