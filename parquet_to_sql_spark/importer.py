@@ -73,8 +73,8 @@ class Importer:
         assert_safe_column_names(projected.columns)
 
         # Sinks report rows ACTUALLY written (CopySink / InsertSink:
-        # accumulator in the foreachPartition action; DuckDbSink:
-        # insert count) — no second source scan, and the count
+        # per-partition committed counts summed on the driver;
+        # DuckDbSink: insert count) — no second source scan, and the count
         # reflects what landed, not what the source holds.
         written = self.sink.write(projected, table, truncate=truncate)
         if written is not None:

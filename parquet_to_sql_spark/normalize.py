@@ -132,7 +132,10 @@ def copy_lines(df: DataFrame) -> DataFrame:
     """Render a DataFrame to single-column COPY text lines
     (TAB-joined, buildCopyLines parity — ParquetImporter.php:136-149).
 
-    Stays fully vectorized in the JVM; the COPY sink just streams the
-    resulting strings, so Python touches bytes only at the socket."""
+    Stays fully vectorized in the JVM.  The COPY sink appends each
+    line's newline, takes the column as Arrow record batches
+    (``mapInArrow``) and sends each transaction's lines as one byte
+    range of the Arrow data buffer, so Python touches bytes only at
+    the socket and never builds a per-row object."""
     parts = [copy_value(F.col(f.name), f.dataType) for f in df.schema.fields]
     return df.select(F.concat_ws("\t", *parts).alias("line"))

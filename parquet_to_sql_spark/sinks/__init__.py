@@ -4,7 +4,8 @@ The reference has exactly two: Postgres COPY (fast path,
 ParquetImporter.php:98-121) and batched INSERT fallback (:123-125).
 Here, one class per sink kind of config.SINK_KINDS:
   * CopySink      — parallel per-partition COPY FROM STDIN (the scale
-                    fast path; psycopg or the stdlib pg_wire client)
+                    fast path: Arrow batches in, one write per batch
+                    transaction; psycopg or the stdlib pg_wire client)
                     — sink "copy"
   * InsertSink    — the same per-partition batch loop sending
                     multi-row INSERTs (sinks/insert_pg.py); sink "pg"

@@ -4,8 +4,9 @@ Postgres sinks share.
 Reference semantics (ParquetImporter.php:90-121), generalized from
 one sequential writer to one writer per partition:
   * rows are rendered to COPY text lines (TAB delimiter, \N null,
-    escaping per formatCopyValue) — done JVM-side by
-    normalize.copy_lines before this sink ever runs;
+    escaping per formatCopyValue), each ending in its newline — done
+    JVM-side by normalize.copy_lines (render_copy) before any writer
+    runs;
   * each batch of `batch_size` lines goes through COPY FROM STDIN
     inside its own transaction with `SET LOCAL statement_timeout`
     (ParquetImporter.php:102-118, default 300 s from
@@ -13,10 +14,21 @@ one sequential writer to one writer per partition:
   * a failed COPY rolls back its transaction and surfaces a
     RuntimeError naming the cause (:109-118).
 
-``batch_partition`` is that connect/batch/timeout/commit/rollback loop
+Arrow hand-off: the rendered frame reaches each writer through
+``DataFrame.mapInArrow`` as record batches of one string column,
+whose lines lie back to back in the column's data buffer.  A batch of
+``batch_size`` lines is therefore the byte range between two of the
+column's offsets, and its transaction sends it with ONE write: no
+Python object per row (line_bytes).  A batch that straddles two Arrow
+batches is joined from two slices.  Each writer returns its committed
+row count as one ``(rows,)`` record, summed on the driver.
+
+``batch_partition`` is the connect/cut/timeout/commit/rollback loop
 and ``PgBatchSink`` the write scaffolding around it; the COPY sink
 here and the INSERT fallback (sinks/insert_pg.py) differ only in how
-a frame is rendered and how one batch is sent.
+a frame is rendered, how it reaches the writer (Arrow batches here,
+Python Rows there: sql_literal needs Python values) and how one batch
+is sent.
 
 Atomicity note (SURVEY.md §7 "what's hard" #1): the reference commits
 PER BATCH, so partial success is already its contract; with N
@@ -34,9 +46,15 @@ works on executors with no driver installed.
 
 from __future__ import annotations
 
-from typing import Callable, Iterable
+import functools
+import io
+import struct
+from typing import Callable, Iterable, Iterator, Sequence
 
+import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from parquet_to_sql_spark.config import DEFAULT_BATCH_SIZE, DEFAULT_COPY_TIMEOUT
 from parquet_to_sql_spark.identifiers import (
@@ -58,61 +76,95 @@ def _default_connection_factory(dsn: str):
         return pg_wire.connect(dsn)
 
 
+def render_copy(df: DataFrame) -> DataFrame:
+    """``copy_lines`` with each line's trailing newline appended in the
+    JVM: the one ``line`` column holds exactly the bytes COPY reads."""
+    return copy_lines(df).select(F.concat("line", F.lit("\n")).alias("line"))
+
+
+def line_bytes(arrays: Sequence[pa.Array]):
+    """The bytes of the rendered lines in ``arrays``, in order.  Each
+    array is a ``string`` or ``large_string`` column, possibly a slice
+    with a non-zero ``offset``; its lines are the data-buffer range
+    between its first and one-past-last offsets (byte offsets, so
+    multi-byte UTF-8 needs no decoding).  One array gives a zero-copy
+    view; several are joined."""
+    views = []
+    for arr in arrays:
+        _, offsets, data = arr.buffers()
+        fmt = "<q" if pa.types.is_large_string(arr.type) else "<i"
+        width = struct.calcsize(fmt)
+        (start,) = struct.unpack_from(fmt, offsets, width * arr.offset)
+        (end,) = struct.unpack_from(fmt, offsets, width * (arr.offset + len(arr)))
+        views.append(memoryview(data)[start:end])
+    return views[0] if len(views) == 1 else b"".join(views)
+
+
+def _count_batch(n: int) -> pa.RecordBatch:
+    """The one-row ``(rows,)`` record a writer answers with, built from
+    its 8 bytes: converting a Python list instead (``pa.array``,
+    ``from_pydict``) would page ~30 MB of pyarrow's conversion code
+    into every Python worker that writes."""
+    rows = pa.Array.from_buffers(pa.int64(), 1, [None, pa.py_buffer(struct.pack("<q", n))])
+    return pa.RecordBatch.from_arrays([rows], ["rows"])
+
+
 def _copy_stream(
     cur,
     sql: str,
-    line_iter: Iterable[str],
+    payloads: Iterable,
     *,
     quoted_table: str,
     quoted_columns: list[str],
-) -> int:
-    """Stream lines through whichever COPY spelling the driver's
-    cursor exposes — ``copy`` (psycopg3 / the stdlib pg_wire client),
-    ``copy_expert`` (psycopg2, SQL + file-like), or ``copy_from``
-    (psycopg2 legacy: file-like + raw table/column names, default
-    TAB/\\N matching our wire format) — and return the number of
-    lines sent.  choose_sink's supports_copy probe accepts all three
+) -> None:
+    """Send COPY text (bytes-like payloads, in order) through whichever
+    COPY spelling the driver's cursor exposes — ``copy`` (psycopg3 /
+    the stdlib pg_wire client: one COPY statement, one ``write`` per
+    payload), ``copy_expert`` (psycopg2, SQL + file-like) or
+    ``copy_from`` (psycopg2 legacy: file-like + raw table/column
+    names, default TAB/\\N matching our wire format), the psycopg2
+    spellings with one COPY statement over a ``BytesIO`` per payload
+    (several statements in one transaction: identical commit
+    semantics).  choose_sink's supports_copy probe accepts all three
     spellings (ADVICE r04: a copy_from-only driver used to pass the
     probe then AttributeError at write time), so the sink must drive
     all three.  copy_from interpolates table/columns raw into its
-    COPY statement, so it receives the pre-quoted identifiers.  The
-    psycopg2 branches feed bounded StringIO chunks (several COPY
-    statements in the same transaction — identical commit
-    semantics), so no branch ever materializes a whole partition."""
-    n = 0
+    COPY statement, so it receives the pre-quoted identifiers."""
     if hasattr(cur, "copy"):
         with cur.copy(sql) as cp:
-            for line in line_iter:
-                cp.write(line + "\n")
-                n += 1
-        return n
-    import io
-
-    if hasattr(cur, "copy_expert"):
-        def send(chunk: list[str]) -> None:
-            cur.copy_expert(sql, io.StringIO("".join(c + "\n" for c in chunk)))
+            for payload in payloads:
+                cp.write(payload)
+    elif hasattr(cur, "copy_expert"):
+        for payload in payloads:
+            cur.copy_expert(sql, io.BytesIO(payload))
     else:
-        def send(chunk: list[str]) -> None:
-            cur.copy_from(
-                io.StringIO("".join(c + "\n" for c in chunk)),
-                quoted_table,
-                columns=quoted_columns,
-            )
+        for payload in payloads:
+            cur.copy_from(io.BytesIO(payload), quoted_table, columns=quoted_columns)
 
-    chunk: list[str] = []
-    for line in line_iter:
-        chunk.append(line)
-        n += 1
-        if len(chunk) >= 10_000:
-            send(chunk)
-            chunk = []
-    if chunk:
-        send(chunk)
-    return n
+
+def cut_batches(chunks: Iterable[Sequence], batch_size: int) -> Iterator[list]:
+    """Regroup a partition's chunks (Arrow arrays, lists of rows) into
+    batches of exactly ``batch_size`` items, the last one possibly
+    shorter, however the chunks are sized.  A batch is the list of
+    chunk slices it covers; slicing an Arrow array copies nothing."""
+    batch: list = []
+    n = 0
+    for chunk in chunks:
+        i, size = 0, len(chunk)
+        while i < size:
+            take = min(size - i, batch_size - n)
+            batch.append(chunk[i : i + take])
+            n += take
+            i += take
+            if n == batch_size:
+                yield batch
+                batch, n = [], 0
+    if batch:
+        yield batch
 
 
 def batch_partition(
-    items: Iterable,
+    chunks: Iterable[Sequence],
     *,
     dsn: str,
     batch_size: int,
@@ -124,12 +176,13 @@ def batch_partition(
     """The per-partition batch-transaction loop of both Postgres sinks
     (the reference's flush loop, ParquetImporter.php:56-71 + :102-118).
 
-    Runs on an executor. One connection per partition; per batch of
-    batch_size items: one transaction with `SET LOCAL
-    statement_timeout`, ``send(cursor, batch)``, commit.  A failed
-    batch rolls back and raises ``RuntimeError("<command> command
-    failed: ...")``, leaving prior batches committed.  Returns the
-    number of items COMMITTED.
+    Runs on an executor. One connection per partition; the chunks are
+    cut into batches of exactly batch_size items (cut_batches), and
+    each batch is one transaction with `SET LOCAL statement_timeout`,
+    ``send(cursor, batch)`` and a commit.  A failed batch rolls back
+    and raises ``RuntimeError("<command> command failed: ...")``,
+    leaving prior batches committed.  An empty partition commits
+    nothing.  Returns the number of items COMMITTED.
 
     Retry caveat (inherited from the reference's per-batch-commit
     contract): if a task dies AFTER some batches committed, Spark's
@@ -140,33 +193,24 @@ def batch_partition(
     """
     conn = connection_factory(dsn)
     try:
-        def flush(b: list) -> int:
-            if not b:
-                return 0
+        written = 0
+        for batch in cut_batches(chunks, batch_size):
             cur = conn.cursor()
             try:
                 cur.execute(f"SET LOCAL statement_timeout = {int(timeout_s * 1000)}")
-                send(cur, b)
+                send(cur, batch)
                 conn.commit()
-                return len(b)
             except Exception as exc:
                 conn.rollback()
                 raise RuntimeError(f"{command} command failed: {exc}") from exc
-
-        written = 0
-        batch: list = []
-        for item in items:
-            batch.append(item)
-            if len(batch) >= batch_size:
-                written += flush(batch)
-                batch = []
-        return written + flush(batch)
+            written += sum(map(len, batch))
+        return written
     finally:
         conn.close()
 
 
 def copy_partition(
-    lines: Iterable[str],
+    batches: Iterable[pa.RecordBatch],
     *,
     dsn: str,
     table: str,
@@ -175,30 +219,35 @@ def copy_partition(
     timeout_s: int,
     connection_factory: Callable[[str], object],
 ) -> int:
-    """Stream one partition's COPY lines in batch_size transactions,
-    one COPY statement per batch (batch_partition)."""
+    """Send one partition's rendered lines — record batches of one
+    string column, as mapInArrow hands them over — in batch_size
+    transactions, each one COPY statement fed by one write of the
+    batch's bytes (batch_partition, line_bytes)."""
     quoted_table = quote_identifier(table)
     quoted_columns = [quote_identifier(c) for c in columns]
     sql = f"COPY {quoted_table} ({', '.join(quoted_columns)}) FROM STDIN"
 
-    def send(cur, batch: list[str]) -> None:
+    def send(cur, batch: list[pa.Array]) -> None:
         _copy_stream(
-            cur, sql, batch, quoted_table=quoted_table, quoted_columns=quoted_columns
+            cur, sql, [line_bytes(batch)],
+            quoted_table=quoted_table, quoted_columns=quoted_columns,
         )
 
     return batch_partition(
-        lines, dsn=dsn, batch_size=batch_size, timeout_s=timeout_s,
-        connection_factory=connection_factory, send=send, command="COPY",
+        (b.column(0) for b in batches), dsn=dsn, batch_size=batch_size,
+        timeout_s=timeout_s, connection_factory=connection_factory, send=send,
+        command="COPY",
     )
 
 
 class PgBatchSink:
     """Write scaffolding shared by the Postgres sinks: identifier
     checks, driver-side truncate, ``num_writers`` repartition, and one
-    ``batch_partition`` writer per partition whose committed count
-    comes back through an accumulator.  A subclass names its frame
-    rendering (``render``) and its per-partition writer
-    (``write_partition``)."""
+    ``batch_partition`` writer per partition whose committed counts
+    the driver sums.  A subclass names its frame rendering
+    (``render``), its per-partition writer (``write_partition``) and,
+    when the writer takes something other than Rows, how partitions
+    reach it (``run_partitions``)."""
 
     render: Callable[[DataFrame], DataFrame]
     write_partition: Callable[..., int]
@@ -218,12 +267,11 @@ class PgBatchSink:
         self.connection_factory = connection_factory or _default_connection_factory
 
     def write(self, df: DataFrame, table: str, truncate: bool = False) -> int:
-        """Write and return the number of rows actually committed.
-
-        Counted by an accumulator updated per-partition inside the
-        foreachPartition action — accumulator updates in ACTIONS are
-        applied exactly once per task, so retried tasks don't double
-        count. No second source scan.
+        """Write and return the number of rows actually committed:
+        each partition's writer returns its committed count and the
+        driver sums them.  An action's results come back once per
+        partition, so retried tasks don't double count.  No second
+        source scan.
         """
         assert_safe_table_name(table)
         columns = list(df.columns)
@@ -235,18 +283,16 @@ class PgBatchSink:
         rendered = self.render(df)
         if self.num_writers:
             rendered = rendered.repartition(self.num_writers)
-        write_partition = self.write_partition
-        opts = dict(
-            dsn=self.dsn, table=table, columns=columns, batch_size=self.batch_size,
-            timeout_s=self.timeout_s, connection_factory=self.connection_factory,
-        )
-        rows_acc = df.sparkSession.sparkContext.accumulator(0)
+        return self.run_partitions(rendered, functools.partial(
+            self.write_partition, dsn=self.dsn, table=table, columns=columns,
+            batch_size=self.batch_size, timeout_s=self.timeout_s,
+            connection_factory=self.connection_factory,
+        ))
 
-        def run(partition) -> None:
-            rows_acc.add(write_partition(partition, **opts))
-
-        rendered.foreachPartition(run)
-        return int(rows_acc.value)
+    @staticmethod
+    def run_partitions(rendered: DataFrame, fn: Callable[[Iterator], int]) -> int:
+        """The sum of ``fn(rows)`` over every partition's Row iterator."""
+        return sum(rendered.rdd.mapPartitions(lambda rows: [fn(rows)]).collect())
 
     def _execute_truncate(self, table: str) -> None:
         # Driver-side, once, before any writer starts
@@ -264,11 +310,19 @@ class CopySink(PgBatchSink):
     """COPY text sink: ``write`` plus the exactly-once
     ``write_idempotent`` / ``write_atomic`` paths."""
 
-    render = staticmethod(copy_lines)
+    render = staticmethod(render_copy)
+    write_partition = staticmethod(copy_partition)
 
     @staticmethod
-    def write_partition(partition, **opts) -> int:
-        return copy_partition((row.line for row in partition), **opts)
+    def run_partitions(rendered: DataFrame, fn: Callable[[Iterator], int]) -> int:
+        """The sum of ``fn(batches)`` over every partition's Arrow
+        record batches (``mapInArrow``; each partition answers with one
+        ``(rows,)`` record)."""
+
+        def run(batches):
+            yield _count_batch(fn(batches))
+
+        return sum(r.rows for r in rendered.mapInArrow(run, "rows long").collect())
 
     def write_idempotent(self, df: DataFrame, table: str, batch_id: int) -> int:
         """Exactly-once streaming micro-batch ingest, DISTRIBUTED: each
@@ -311,38 +365,47 @@ class CopySink(PgBatchSink):
             conn.commit()
         finally:
             conn.close()
-        rendered = copy_lines(df)
         dsn, timeout_s, factory = self.dsn, self.timeout_s, self.connection_factory
         bid = int(batch_id)
-        q_table = quoted_table
         q_cols = [quote_identifier(c) for c in df.columns]
 
-        def run(pid: int, it):
+        def run(batches) -> int:
+            pid = TaskContext.get().partitionId()
             conn = factory(dsn)
             try:
                 cur = conn.cursor()
                 cur.execute(
                     f"SELECT 1 FROM {ledger} WHERE batch_id = {bid} "
-                    f"AND partition_id = {int(pid)}"
+                    f"AND partition_id = {pid}"
                 )
                 if cur.fetchone():
                     conn.rollback()
-                    yield 0
-                    return
+                    return 0
+                n = 0
+
+                def payloads():
+                    # one write per Arrow batch: the partition streams
+                    # through one COPY without being materialized
+                    nonlocal n
+                    for b in batches:
+                        if b.num_rows:
+                            n += b.num_rows
+                            yield line_bytes([b.column(0)])
+
                 try:
                     cur.execute(
                         f"SET LOCAL statement_timeout = {int(timeout_s * 1000)}"
                     )
-                    n = _copy_stream(
-                        cur, copy_sql, (row.line for row in it),
-                        quoted_table=q_table,
+                    _copy_stream(
+                        cur, copy_sql, payloads(),
+                        quoted_table=quoted_table,
                         quoted_columns=q_cols,
                     )
                     cur.execute(
-                        f"INSERT INTO {ledger} VALUES ({bid}, {int(pid)}, {n})"
+                        f"INSERT INTO {ledger} VALUES ({bid}, {pid}, {n})"
                     )
                     conn.commit()
-                    yield n
+                    return n
                 except Exception as exc:
                     conn.rollback()
                     # a racing attempt landed first: its commit stands,
@@ -354,14 +417,12 @@ class CopySink(PgBatchSink):
                         or getattr(exc, "sqlstate", None) == "23505"
                         or "duplicate key" in str(exc)
                     ):
-                        yield 0
-                    else:
-                        raise RuntimeError(f"COPY command failed: {exc}") from exc
+                        return 0
+                    raise RuntimeError(f"COPY command failed: {exc}") from exc
             finally:
                 conn.close()
 
-        counts = rendered.rdd.mapPartitionsWithIndex(run).collect()
-        return int(sum(counts))
+        return self.run_partitions(render_copy(df), run)
 
     def write_atomic(self, df: DataFrame, table: str, suffix: str | None = None) -> int:
         """All-or-nothing load via staging table + atomic swap.
@@ -380,8 +441,9 @@ class CopySink(PgBatchSink):
         after its first attempt committed finds its ledger row and
         skips — "all-or-nothing" holds on a real cluster where task
         retries are routine, not just on a single flawless run.  On
-        this path the whole partition is ONE COPY statement, so
-        `timeout_s` bounds the partition, not a batch; the ledger
+        this path the whole partition is ONE transaction (one COPY
+        statement, written one Arrow batch at a time), so `timeout_s`
+        bounds the partition, not a batch; the ledger
         table is dropped inside the swap transaction.
 
         ``suffix`` names the staging table ``<table>_staging_<suffix>``

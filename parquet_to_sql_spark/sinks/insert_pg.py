@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import math
 from decimal import Decimal
+from itertools import chain, islice
 from typing import Callable, Iterable
 
 from parquet_to_sql_spark.config import DEFAULT_BATCH_SIZE, DEFAULT_COPY_TIMEOUT
@@ -84,7 +85,7 @@ def insert_partition(
         f"({', '.join(quote_identifier(c) for c in columns)}) VALUES "
     )
 
-    def send(cur, batch: list[tuple]) -> None:
+    def send(cur, batch: list[list[tuple]]) -> None:
         # sql_literal's quote-doubling framing requires it; a
         # server/pooler configured with scs=off would otherwise
         # let a trailing backslash escape the closing quote
@@ -92,12 +93,15 @@ def insert_partition(
         cur.execute(
             head
             + ", ".join(
-                "(" + ", ".join(sql_literal(v) for v in row) + ")" for row in batch
+                "(" + ", ".join(sql_literal(v) for v in row) + ")"
+                for row in chain.from_iterable(batch)
             )
         )
 
+    rows = iter(rows)
     return batch_partition(
-        rows, dsn=dsn, batch_size=batch_size, timeout_s=timeout_s,
+        iter(lambda: list(islice(rows, batch_size)), []), dsn=dsn,
+        batch_size=batch_size, timeout_s=timeout_s,
         connection_factory=connection_factory, send=send, command="INSERT",
     )
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +39,13 @@ _INFERENCE_CONFS = (
     # types of partition columns discovered from directory names
     "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
+
+_CONF_PATTERNS = tuple(
+    re.compile(r"[{ ]" + re.escape(k) + r"=([^,}]*)") for k in _INFERENCE_CONFS
+)
+
+# session -> py4j handle on the live map of its explicitly set SQL confs
+_SETTINGS: weakref.WeakKeyDictionary[SparkSession, object] = weakref.WeakKeyDictionary()
 
 # session -> {absolute path: (file signature, inference confs, schema)}
 _SCHEMAS: weakref.WeakKeyDictionary[
@@ -66,6 +74,21 @@ def file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
     return tuple(sig)
 
 
+def inference_confs(spark: SparkSession) -> tuple[str | None, ...]:
+    """The values set for ``_INFERENCE_CONFS`` in this session, None
+    where a conf is unset (so at its default), read in ONE py4j round
+    trip: the text of the session's live SQL-conf map
+    (``{key=value, ...}``), searched for each key.  A conf set back to
+    its default reads differently from an unset one, which costs at
+    most one extra inference and never reuses a schema inferred under
+    other values."""
+    settings = _SETTINGS.get(spark)
+    if settings is None:
+        settings = _SETTINGS[spark] = spark._jsparkSession.sessionState().conf().settings()
+    text = settings.toString()
+    return tuple(m.group(1) if (m := p.search(text)) else None for p in _CONF_PATTERNS)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers a local path's schema
     once per session.  Later reads of the same unchanged files, under
@@ -80,7 +103,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     sig = file_signature(path)
     if not sig:
         return spark.read.parquet(path)
-    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    confs = inference_confs(spark)
     # two threads missing at once both infer and store equal entries
     memo = _SCHEMAS.setdefault(spark, {})
     key = os.path.abspath(path)

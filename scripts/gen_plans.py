@@ -6,6 +6,9 @@ With query names, write each named query's formatted plan to
 ``DIR/<name>_<S>.txt`` instead (the before/after dumps under plans/),
 at the same sf0.001 and 8 shuffle partitions.
 
+Both outputs mask the JVM-global ``[plan_id=N]`` counters as
+``[plan_id=#]``, so two runs on the same tree write the same bytes.
+
 Usage:
     python scripts/gen_plans.py                              # PLANS.md
     python scripts/gen_plans.py NAME ... --out DIR --suffix S
@@ -27,11 +30,17 @@ from parquet_to_sql_spark.session import get_spark  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 
+def mask_plan_ids(plan: str) -> str:
+    """``plan`` with every ``[plan_id=N]`` written ``[plan_id=#]``: the
+    ids count plans across the whole JVM, so they differ run to run."""
+    return re.sub(r"\[plan_id=\d+\]", "[plan_id=#]", plan)
+
+
 def dump(spark, names: list[str], out_dir: str, suffix: str) -> None:
     qs = all_queries()
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        plan = formatted_plan(qs[name].build(spark, SF))
+        plan = mask_plan_ids(formatted_plan(qs[name].build(spark, SF)))
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
         print(name, len(plan))
@@ -51,7 +60,7 @@ def write_plans_md(spark) -> None:
     for name, q in sorted(all_queries().items()):
         if not q.headline:
             continue
-        plan = formatted_plan(q.build(spark, SF))
+        plan = mask_plan_ids(formatted_plan(q.build(spark, SF)))
         shuffles = len(re.findall(r"^\(\d+\) Exchange\b", plan, flags=re.M))
         bcasts = len(re.findall(r"^\(\d+\) BroadcastExchange\b", plan, flags=re.M))
         pushed = bool(re.search(r"PushedFilters: \[[^\]]", plan))

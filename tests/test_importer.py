@@ -39,10 +39,10 @@ class FakeCopy:
         return False
 
     def write(self, data):
-        self.log.append(("copy_write", data))
+        self.log.append(("copy_write", data.encode() if isinstance(data, str) else bytes(data)))
 
 
-class FakeCursor:
+class _FakeCursorBase:
     def __init__(self, log, fail_copy=False):
         self.log = log
         self.fail_copy = fail_copy
@@ -52,20 +52,55 @@ class FakeCursor:
         if self.fail_copy and sql.startswith("INSERT"):
             raise RuntimeError("boom")
 
-    def copy(self, sql):
+    def fetchone(self):
+        # ledger lookups: never applied -> writer proceeds
+        return None
+
+    def _start_copy(self, sql):
         self.log.append(("copy", sql))
         if self.fail_copy:
             raise RuntimeError("boom")
+
+
+class FakeCursor(_FakeCursorBase):
+    """psycopg3 / pg_wire spelling: ``copy(sql)`` context manager."""
+
+    def copy(self, sql):
+        self._start_copy(sql)
         return FakeCopy(self.log)
 
 
+class FakeExpertCursor(_FakeCursorBase):
+    """psycopg2 spelling: ``copy_expert(sql, file)``."""
+
+    def copy_expert(self, sql, file):
+        self._start_copy(sql)
+        self.log.append(("copy_write", file.read()))
+
+
+class FakeCopyFromCursor(_FakeCursorBase):
+    """psycopg2 legacy spelling: ``copy_from(file, table, columns=)``."""
+
+    def copy_from(self, file, table, columns=None):
+        self._start_copy(f"COPY {table} ({', '.join(columns)}) FROM STDIN")
+        self.log.append(("copy_write", file.read()))
+
+
+SPELLINGS = {
+    "copy": FakeCursor,
+    "copy_expert": FakeExpertCursor,
+    "copy_from": FakeCopyFromCursor,
+}
+
+
 class FakeConn:
-    def __init__(self, log, fail_copy=False):
+    def __init__(self, log, fail_copy=False, spelling="copy"):
         self.log = log
         self.fail_copy = fail_copy
+        self.spelling = spelling
 
     def cursor(self):
-        return FakeCursor(self.log, self.fail_copy)
+        return SPELLINGS[self.spelling](self.log, self.fail_copy)
 
     def commit(self):
         self.log.append(("commit", None))
@@ -77,14 +112,39 @@ class FakeConn:
         self.log.append(("close", None))
 
 
+def _line_batches(lines, per_batch=None, type=pa.string()):
+    """Rendered COPY lines as the record batches mapInArrow hands a
+    writer: one string column, ``per_batch`` lines per batch."""
+    per_batch = per_batch or max(len(lines), 1)
+    return [
+        pa.RecordBatch.from_arrays([pa.array(lines[i : i + per_batch], type)], ["line"])
+        for i in range(0, len(lines), per_batch)
+    ]
+
+
+def _txn_sends(log):
+    """What each transaction sent, in order: its COPY writes (or INSERT
+    statements) concatenated, as bytes."""
+    txns, sent = [], []
+    for kind, data in log:
+        if kind == "copy_write":
+            sent.append(data.encode() if isinstance(data, str) else data)
+        elif kind == "execute" and data.startswith("INSERT"):
+            sent.append(data.encode())
+        elif kind in ("commit", "rollback"):
+            txns.append(b"".join(sent))
+            sent = []
+    return txns
+
+
 # ---------------------------------------------- 1. COPY wire protocol
 def test_copy_protocol_exact_wire_format():
     """Parity with tests/ParquetImporterTest.php:11-49: exact COPY
-    lines, TAB delimiter, \\N nulls, quoted identifiers, one
+    bytes, TAB delimiter, \\N nulls, quoted identifiers, one
     transaction per batch, statement timeout, commit."""
     log = []
     copy_partition(
-        iter(["1\talice", "2\tbob"]),
+        _line_batches(["1\talice\n", "2\tbob\n"]),
         dsn="postgres://x",
         table="public.users",
         columns=["id", "name"],
@@ -93,31 +153,36 @@ def test_copy_protocol_exact_wire_format():
         connection_factory=lambda dsn: FakeConn(log),
     )
     assert ("execute", "SET LOCAL statement_timeout = 5000") in log
-    assert ("copy", 'COPY "public"."users" ("id", "name") FROM STDIN') in log
-    assert ("copy_write", "1\talice\n") in log
-    assert ("copy_write", "2\tbob\n") in log
+    assert log.count(("copy", 'COPY "public"."users" ("id", "name") FROM STDIN')) == 1
+    assert _txn_sends(log) == [b"1\talice\n2\tbob\n"]
     assert log.count(("commit", None)) == 1
     assert ("rollback", None) not in log
     assert log[-1] == ("close", None)
 
 
 # The two callers of the shared batch loop (copy_pg.batch_partition):
-# (writer, item i of its input, the log event that sends one batch,
-# the event the send of rows 10 and 11 logs, the error prefix).
+# (writer, item i of its input, the writer's input from a list of
+# items, the log event that sends one batch, what one batch's
+# transaction sends, the error prefix).  The COPY input comes in Arrow
+# batches of 3 lines, so batches of 5 straddle them.
 _BATCH_WRITERS = [
     (
         copy_partition,
-        lambda i: f"{i}\talice",
+        lambda i: f"{i}\talice\n",
+        lambda items: _line_batches(items, per_batch=3),
         lambda e: e[0] == "copy",
-        ("copy_write", "11\talice\n"),
+        lambda items: "".join(items).encode(),
         "COPY",
     ),
     (
         insert_partition,
         lambda i: (i, "alice"),
+        iter,
         lambda e: e[0] == "execute" and e[1].startswith("INSERT"),
-        ("execute", 'INSERT INTO "t" ("id", "name") VALUES '
-                    "(10, 'alice'), (11, 'alice')"),
+        lambda items: (
+            'INSERT INTO "t" ("id", "name") VALUES '
+            + ", ".join(f"({i}, '{name}')" for i, name in items)
+        ).encode(),
         "INSERT",
     ),
 ]
@@ -125,11 +190,12 @@ _BATCH_WRITERS = [
 
 def test_copy_batching_one_txn_per_batch():
     """Both callers of the shared loop: one transaction, statement
-    timeout and send per batch."""
-    for writer, item, is_send, last_send, _ in _BATCH_WRITERS:
+    timeout and send per batch, and exactly the batch's items sent."""
+    for writer, item, to_input, is_send, payload, _ in _BATCH_WRITERS:
         log = []
+        items = [item(i) for i in range(12)]
         written = writer(
-            iter(item(i) for i in range(12)),
+            to_input(items),
             dsn="d",
             table="t",
             columns=["id", "name"],
@@ -141,8 +207,62 @@ def test_copy_batching_one_txn_per_batch():
         assert log.count(("commit", None)) == 3
         assert sum(1 for e in log if is_send(e)) == 3
         assert log.count(("execute", "SET LOCAL statement_timeout = 300000")) == 3
-        assert last_send in log
+        assert _txn_sends(log) == [
+            payload(items[0:5]), payload(items[5:10]), payload(items[10:12])
+        ]
         assert written == 12
+
+
+# Lines the COPY renderer produces for the hard cases: multi-byte
+# UTF-8 (2-, 3- and 4-byte), escaped TAB/CR/LF/backslash, \N nulls
+# and empty strings.
+_HARD_LINES = [
+    "1\tcaf\u00e9\n",
+    "2\t\u65e5\u672c\u8a9e\t\U0001f600\n",
+    "3\ta\\tb\\rc\\nd\\\\e\n",
+    "4\t\\N\t\n",
+    "5\t\t\n",
+    "6\t\U0001f389\u00e9\u00e9\u65e5\n",
+    "7\t\\N\t\\N\n",
+]
+
+
+@pytest.mark.parametrize("spelling", sorted(SPELLINGS))
+@pytest.mark.parametrize("arrow_type", [pa.string(), pa.large_string()])
+def test_copy_partition_sends_exact_bytes_of_sliced_arrays(spelling, arrow_type):
+    """Every driver spelling sends each transaction exactly the bytes
+    of its lines, reading ``string`` and ``large_string`` columns by
+    byte offsets, including slices with a non-zero ``offset``."""
+    batch = _line_batches(_HARD_LINES, type=arrow_type)[0]
+    for start, length in [(0, 7), (2, 5), (3, 1)]:
+        sliced = batch.slice(start, length)
+        assert sliced.column(0).offset == start
+        log = []
+        written = copy_partition(
+            [sliced], dsn="d", table="t", columns=["id", "v"], batch_size=2,
+            timeout_s=5, connection_factory=lambda dsn: FakeConn(log, spelling=spelling),
+        )
+        lines = _HARD_LINES[start : start + length]
+        want = ["".join(lines[i : i + 2]).encode() for i in range(0, length, 2)]
+        assert written == length
+        assert _txn_sends(log) == want
+        assert log.count(("commit", None)) == len(want)
+        assert sum(e[0] == "copy_write" for e in log) == len(want)
+
+
+def test_copy_partition_empty_commits_nothing():
+    """An empty partition — no batches, or only empty ones — opens no
+    transaction and sends nothing."""
+    empty = _line_batches(_HARD_LINES)[0].slice(3, 0)
+    for batches in ([], [empty], [empty, empty]):
+        for spelling in SPELLINGS:
+            log = []
+            written = copy_partition(
+                batches, dsn="d", table="t", columns=["id"], batch_size=2,
+                timeout_s=5, connection_factory=lambda dsn: FakeConn(log, spelling=spelling),
+            )
+            assert written == 0
+            assert log == [("close", None)]
 
 
 def test_pg_wire_copy_frames_concatenate_to_exact_input():
@@ -181,11 +301,11 @@ def test_pg_wire_copy_frames_concatenate_to_exact_input():
 def test_copy_failure_rolls_back_and_wraps():
     """Parity with tests/ParquetImporterTest.php:51-76, for both
     callers of the shared loop, each with its own error prefix."""
-    for writer, item, _, _, command in _BATCH_WRITERS:
+    for writer, item, to_input, _, _, command in _BATCH_WRITERS:
         log = []
         with pytest.raises(RuntimeError, match=f"{command} command failed: boom"):
             writer(
-                iter([item(1)]),
+                to_input([item(1)]),
                 dsn="d",
                 table="users",
                 columns=["id", "name"],
@@ -336,7 +456,7 @@ def test_import_result_shape(spark, mixed_parquet, tmp_path):
 
 
 def test_copysink_write_end_to_end_with_fake_factory(spark, tmp_path):
-    """CopySink.write through real foreachPartition: the fake factory
+    """CopySink.write through the real mapInArrow: the fake factory
     appends wire events to files (executors are separate processes)."""
     logdir = str(tmp_path / "copylog")
     os.makedirs(logdir, exist_ok=True)
@@ -346,14 +466,12 @@ def test_copysink_write_end_to_end_with_fake_factory(spark, tmp_path):
                     connection_factory=_file_logging_factory(logdir))
     sink.write(df, "public.users")
 
-    events = []
-    for fn in os.listdir(logdir):
-        with open(os.path.join(logdir, fn)) as f:
-            events.extend(json.loads(line) for line in f)
+    events = [e for log in _conn_logs(logdir) for e in log]
     kinds = [e[0] for e in events]
     assert "copy" in kinds and "commit" in kinds
-    writes = sorted(e[1] for e in events if e[0] == "copy_write")
-    assert writes == ["1\talice\n", "2\t\\N\n"]
+    # one write per transaction: both lines in one COPY payload
+    writes = [e[1] for e in events if e[0] == "copy_write"]
+    assert writes == ["1\talice\n2\t\\N\n"]
 
 
 # ------------------------------------------ 6. sink-side row accounting
@@ -403,8 +521,8 @@ def test_copysink_write_returns_rows_landed(spark, tmp_path):
 
 
 def test_copysink_failing_partition_raises_not_overreports(spark):
-    """A failed COPY surfaces as an error — the accumulator never turns
-    a partial load into a clean ImportResult."""
+    """A failed COPY surfaces as an error — the summed per-partition
+    counts never turn a partial load into a clean ImportResult."""
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
     sink = CopySink("dsn://fake", batch_size=1, timeout_s=5,
                     connection_factory=_failing_factory)
@@ -447,63 +565,116 @@ def test_copy_binary_rendered_as_bytea_hex(spark):
     assert lines == ["1\t\\\\x00ff090a", "2\t\\N"]
 
 
-def _file_logging_factory(logdir):
+def _file_logging_factory(logdir, spelling="copy"):
     def factory(dsn):
-        return _FileLogConn(logdir)
+        return FakeConn(_FileLog(logdir), spelling=spelling)
 
     return factory
 
 
-class _FileLogConn:
-    """Picklable fake connection that logs wire events to a file."""
+class _FileLog:
+    """Picklable event log of ONE fake connection: executors are
+    separate processes, so each connection appends its wire events to
+    its own JSON-lines file as ``[kind, data, wall-clock time]`` (bytes
+    decoded as UTF-8)."""
 
     def __init__(self, logdir):
-        import threading
+        import uuid
 
-        self.path = os.path.join(logdir, f"{os.getpid()}_{threading.get_ident()}.jsonl")
+        self.path = os.path.join(logdir, f"{uuid.uuid4().hex}.jsonl")
 
-    def _log(self, kind, data=None):
+    def append(self, event):
         import time
 
+        kind, data = event
+        if isinstance(data, (bytes, bytearray, memoryview)):
+            data = bytes(data).decode("utf-8")
         with open(self.path, "a") as f:
             f.write(json.dumps([kind, data, time.time()]) + "\n")
 
-    def cursor(self):
-        conn = self
 
-        class Cur:
-            def execute(self, sql):
-                conn._log("execute", sql)
+def _conn_logs(logdir):
+    """One ``(kind, data)`` event list per fake connection that logged
+    to ``logdir``."""
+    logs = []
+    for fn in sorted(os.listdir(logdir)):
+        with open(os.path.join(logdir, fn)) as f:
+            logs.append([tuple(json.loads(line)[:2]) for line in f])
+    return logs
 
-            def fetchone(self):
-                # ledger lookups: never applied -> writer proceeds
-                return None
 
-            def copy(self, sql):
-                conn._log("copy", sql)
+def _hard_frame(spark):
+    """Values whose COPY lines hold multi-byte UTF-8, escaped
+    TAB/CR/LF/backslash, \\N nulls and empty strings."""
+    return spark.createDataFrame(
+        [
+            (1, "caf\u00e9", "\u65e5\u672c\u8a9e"),
+            (2, "\U0001f600 a\tb", "c\rd\ne\\f"),
+            (3, None, ""),
+            (4, "", None),
+            (5, "\\N", "\u00e9" * 40),
+        ],
+        "id long, s string, t string",
+    ).coalesce(1)
 
-                class Cp:
-                    def __enter__(self):
-                        return self
 
-                    def __exit__(self, *a):
-                        return False
+@pytest.mark.parametrize("spelling", sorted(SPELLINGS))
+def test_copysink_sends_exact_copy_lines_bytes(spark, tmp_path, spelling):
+    """Through the real mapInArrow, for every driver spelling and both
+    Arrow string widths: each transaction sends exactly its lines of
+    ``copy_lines``, each ended by a newline."""
+    df = _hard_frame(spark)
+    lines = [r.line + "\n" for r in copy_lines(df).collect()]
+    want = ["".join(lines[i : i + 2]).encode() for i in range(0, len(lines), 2)]
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    prev = spark.conf.get(key)
+    try:
+        for large in ("false", "true"):
+            spark.conf.set(key, large)
+            logdir = tmp_path / f"{spelling}_{large}"
+            logdir.mkdir()
+            sink = CopySink("dsn://fake", batch_size=2, timeout_s=5,
+                            connection_factory=_file_logging_factory(str(logdir), spelling))
+            assert sink.write(df, "t") == len(lines)
+            (log,) = [log for log in _conn_logs(logdir) if ("commit", None) in log]
+            assert _txn_sends(log) == want
+            assert sum(e[0] == "copy_write" for e in log) == len(want)
+    finally:
+        spark.conf.set(key, prev)
 
-                    def write(self, data):
-                        conn._log("copy_write", data)
 
-                return Cp()
-
-        return Cur()
-
-    def commit(self):
-        self._log("commit")
-
-    def rollback(self):
-        self._log("rollback")
-
-    def close(self):
-        self._log("close")
+def test_copysink_batch_composition_independent_of_arrow_batches(spark, tmp_path):
+    """However Spark cuts the rendered frame into Arrow batches
+    (maxRecordsPerBatch 1, 3 or the default) and into partitions (1 or
+    4), the sink sends the same multiset of lines, and every
+    transaction holds exactly batch_size lines except the last of each
+    partition."""
+    df = spark.createDataFrame(
+        [(i, "\u00e9" * (i % 4) + "x\ty" * (i % 3)) for i in range(47)],
+        "id long, s string",
+    )
+    want = sorted((r.line + "\n").encode() for r in copy_lines(df).collect())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    try:
+        for per_batch in ("1", "3", prev):
+            spark.conf.set(key, per_batch)
+            for parts in (1, 4):
+                logdir = tmp_path / f"{per_batch}_{parts}"
+                logdir.mkdir()
+                sink = CopySink("dsn://fake", batch_size=5, timeout_s=5,
+                                connection_factory=_file_logging_factory(str(logdir)))
+                assert sink.write(df.repartition(parts), "t") == 47
+                sent = []
+                for log in _conn_logs(logdir):
+                    txns = _txn_sends(log)
+                    sizes = [t.count(b"\n") for t in txns]
+                    assert all(n == 5 for n in sizes[:-1]), (per_batch, parts, sizes)
+                    assert all(0 < n <= 5 for n in sizes[-1:]), (per_batch, parts, sizes)
+                    sent += b"".join(txns).splitlines(keepends=True)
+                assert sorted(sent) == want, (per_batch, parts)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_import_from_csv_source_pluggable_reader(spark, tmp_path):

@@ -16,8 +16,10 @@ import pytest
 
 from parquet_to_sql_spark.catalog import load_table
 from parquet_to_sql_spark.sources.parquet import (
+    _INFERENCE_CONFS,
     ParquetSource,
     file_signature,
+    inference_confs,
     read_parquet,
 )
 
@@ -98,6 +100,46 @@ def test_inference_conf_change_reinfers_events_ts(spark, tmp_path):
         assert dict(load_table(spark, str(tmp_path), "events").dtypes)["ts"] == "timestamp"
     finally:
         spark.conf.set(key, prev)
+
+
+def test_inference_conf_set_back_to_default_reinfers(spark, tmp_path, monkeypatch):
+    """A conf toggled between reads is seen whichever way it returns to
+    its default (unset, or set to the default value), and the confs
+    are read in one py4j round trip."""
+    path = str(tmp_path / "blobs.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    default = "false"
+    was = spark.conf.get(key)
+
+    def b_type():
+        return dict(read_parquet(spark, path).dtypes)["b"]
+
+    try:
+        spark.conf.unset(key)
+        assert b_type() == "binary"
+        spark.conf.set(key, "true")
+        assert b_type() == "string"
+        spark.conf.unset(key)
+        assert b_type() == "binary"
+        spark.conf.set(key, "true")
+        assert b_type() == "string"
+        spark.conf.set(key, default)
+        assert b_type() == "binary"
+        _, n_jobs = _jobs(spark, lambda: read_parquet(spark, path))
+        assert n_jobs == 0
+
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        calls = []
+        monkeypatch.setattr(
+            client, "send_command", lambda *a, **k: calls.append(a) or send(*a, **k)
+        )
+        assert inference_confs(spark)[list(_INFERENCE_CONFS).index(key)] == default
+        monkeypatch.undo()
+        assert len(calls) == 1
+    finally:
+        spark.conf.set(key, was)
 
 
 def test_uri_path_bypasses_memo(spark, tmp_path):

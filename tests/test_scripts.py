@@ -83,3 +83,17 @@ def test_ab_asserts_identity_and_emits_ab_json_keys(spark):
     differ = {"q": {"old": lambda: spark.range(6), "new": lambda: spark.range(1, 6)}}
     with pytest.raises(AssertionError, match="variants disagree"):
         ab.compare(spark, differ, reps=1)
+
+
+def test_gen_plans_masks_plan_ids():
+    gp = _load(REPO / "scripts" / "gen_plans.py")
+    plan = (
+        "(3) Exchange\nArguments: hashpartitioning(k#12, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id=605]\n(7) BroadcastExchange [plan_id=1234]\nk#12 [plan_id=]\n"
+    )
+    assert gp.mask_plan_ids(plan) == (
+        "(3) Exchange\nArguments: hashpartitioning(k#12, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id=#]\n(7) BroadcastExchange [plan_id=#]\nk#12 [plan_id=]\n"
+    )
+    # two dumps that differ only in the counters mask to the same text
+    assert gp.mask_plan_ids(plan.replace("605", "9")) == gp.mask_plan_ids(plan)
