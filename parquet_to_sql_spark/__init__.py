@@ -18,6 +18,12 @@ Public API:
 from parquet_to_sql_spark.session import get_spark
 from parquet_to_sql_spark.catalog import TABLES, load_table, register_views
 from parquet_to_sql_spark.result import ImportResult
+from parquet_to_sql_spark.worker import install as _install_worker_shim
+
+# In a Python worker, importing any package function (cloudpickle
+# imports it by reference) stops later tasks re-reading unchanged zip
+# archives; on the driver this does nothing (see worker.py).
+_install_worker_shim()
 
 __all__ = [
     "get_spark",

@@ -20,6 +20,8 @@ Defaults are chosen for the 100 TB posture:
 from __future__ import annotations
 
 import os
+import re
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -48,9 +50,39 @@ def local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
+# session -> py4j handle on the live map of its explicitly set SQL confs
+_SETTINGS: weakref.WeakKeyDictionary[SparkSession, object] = weakref.WeakKeyDictionary()
+
+
+def conf_pattern(key: str) -> re.Pattern:
+    """Matches ``key``'s entry in ``conf_settings_text``; group 1 is its value."""
+    return re.compile(r"[{ ]" + re.escape(key) + r"=([^,}]*)")
+
+
+_RUNTIME_PATTERNS = {k: conf_pattern(k) for k in RUNTIME_CONFS}
+
+
+def conf_settings_text(spark: SparkSession) -> str:
+    """The session's explicitly set SQL confs as ``{key=value, ...}``,
+    read in ONE py4j round trip from the live conf map (its handle is
+    cached per session).  A conf at its default is absent."""
+    settings = _SETTINGS.get(spark)
+    if settings is None:
+        settings = _SETTINGS[spark] = spark._jsparkSession.sessionState().conf().settings()
+    return settings.toString()
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply engine confs to an externally-built session (best effort)."""
+    """Apply engine confs to an externally-built session (best effort).
+    Every read path calls this, so it reads the session's confs once
+    and sets only those absent or set to another value: a session that
+    already holds them costs one py4j call, and a conf the caller
+    changed between reads is put back."""
+    text = conf_settings_text(spark)
     for k, v in RUNTIME_CONFS.items():
+        m = _RUNTIME_PATTERNS[k].search(text)
+        if m and m.group(1) == v:
+            continue
         try:
             spark.conf.set(k, v)
         except Exception:

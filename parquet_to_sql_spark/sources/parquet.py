@@ -19,13 +19,12 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from parquet_to_sql_spark.session import apply_runtime_confs
+from parquet_to_sql_spark.session import apply_runtime_confs, conf_pattern, conf_settings_text
 
 # Confs that change what Spark infers from the same footers; a
 # remembered schema is reused only while all of them are unchanged.
@@ -40,12 +39,7 @@ _INFERENCE_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
 
-_CONF_PATTERNS = tuple(
-    re.compile(r"[{ ]" + re.escape(k) + r"=([^,}]*)") for k in _INFERENCE_CONFS
-)
-
-# session -> py4j handle on the live map of its explicitly set SQL confs
-_SETTINGS: weakref.WeakKeyDictionary[SparkSession, object] = weakref.WeakKeyDictionary()
+_CONF_PATTERNS = tuple(conf_pattern(k) for k in _INFERENCE_CONFS)
 
 # session -> {absolute path: (file signature, inference confs, schema)}
 _SCHEMAS: weakref.WeakKeyDictionary[
@@ -77,15 +71,11 @@ def file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
 def inference_confs(spark: SparkSession) -> tuple[str | None, ...]:
     """The values set for ``_INFERENCE_CONFS`` in this session, None
     where a conf is unset (so at its default), read in ONE py4j round
-    trip: the text of the session's live SQL-conf map
-    (``{key=value, ...}``), searched for each key.  A conf set back to
-    its default reads differently from an unset one, which costs at
-    most one extra inference and never reuses a schema inferred under
-    other values."""
-    settings = _SETTINGS.get(spark)
-    if settings is None:
-        settings = _SETTINGS[spark] = spark._jsparkSession.sessionState().conf().settings()
-    text = settings.toString()
+    trip (``session.conf_settings_text``), searched for each key.  A conf
+    set back to its default reads differently from an unset one, which
+    costs at most one extra inference and never reuses a schema
+    inferred under other values."""
+    text = conf_settings_text(spark)
     return tuple(m.group(1) if (m := p.search(text)) else None for p in _CONF_PATTERNS)
 
 

@@ -8,6 +8,8 @@ at the same sf0.001 and 8 shuffle partitions.
 
 Both outputs mask the JVM-global ``[plan_id=N]`` counters as
 ``[plan_id=#]``, so two runs on the same tree write the same bytes.
+``PLANS.md`` shows each plan's first 6,000 characters, cut at a whole
+line and ended with ``... (N more lines)``.
 
 Usage:
     python scripts/gen_plans.py                              # PLANS.md
@@ -28,12 +30,28 @@ from parquet_to_sql_spark.queries.registry import all_queries  # noqa: E402
 from parquet_to_sql_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+PLAN_CHARS = 6000  # longest plan text one PLANS.md section shows
 
 
 def mask_plan_ids(plan: str) -> str:
     """``plan`` with every ``[plan_id=N]`` written ``[plan_id=#]``: the
     ids count plans across the whole JVM, so they differ run to run."""
     return re.sub(r"\[plan_id=\d+\]", "[plan_id=#]", plan)
+
+
+def clip_plan(plan: str, limit: int = PLAN_CHARS) -> str:
+    """``plan`` cut after the last whole line that fits in ``limit``
+    characters, ending in ``... (N more lines)`` when lines were cut."""
+    if len(plan) <= limit:
+        return plan
+    lines = plan.splitlines()
+    kept, size = [], 0
+    for line in lines:
+        if size + len(line) > limit:
+            break
+        kept.append(line)
+        size += len(line) + 1
+    return "\n".join(kept + [f"... ({len(lines) - len(kept)} more lines)"])
 
 
 def dump(spark, names: list[str], out_dir: str, suffix: str) -> None:
@@ -71,7 +89,7 @@ def write_plans_md(spark) -> None:
             + (" · has pushed filters" if pushed else ""),
             "",
             "```",
-            plan.strip()[:6000],
+            clip_plan(plan.strip()),
             "```",
             "",
         ]

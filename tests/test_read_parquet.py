@@ -142,6 +142,46 @@ def test_inference_conf_set_back_to_default_reinfers(spark, tmp_path, monkeypatc
         spark.conf.set(key, was)
 
 
+def test_runtime_confs_set_only_what_a_caller_changed(spark, tmp_path, monkeypatch):
+    """Every read applies the engine's RUNTIME_CONFS.  A session that
+    already holds them costs one py4j call and no ``conf.set``; a conf
+    the caller flipped between two loads is put back by the second."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from parquet_to_sql_spark.session import RUNTIME_CONFS, apply_runtime_confs
+
+    path = _write_region(tmp_path)
+    key = "spark.sql.adaptive.skewJoin.enabled"
+    assert RUNTIME_CONFS[key] == "true"
+    load_table(spark, str(tmp_path), "region")
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls, sets = [], []
+    monkeypatch.setattr(
+        client, "send_command", lambda *a, **k: calls.append(a) or send(*a, **k)
+    )
+    conf_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set", lambda self, k, v: sets.append(k) or conf_set(self, k, v)
+    )
+    apply_runtime_confs(spark)
+    assert (len(calls), sets) == (1, [])
+
+    try:
+        spark.conf.set(key, "false")
+        sets.clear()
+        ParquetSource(spark, path).load()
+        assert (sets, spark.conf.get(key)) == ([key], "true")
+        spark.conf.unset(key)
+        sets.clear()
+        load_table(spark, str(tmp_path), "region")
+        assert (sets, spark.conf.get(key)) == ([key], "true")
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, "true")
+
+
 def test_uri_path_bypasses_memo(spark, tmp_path):
     path = _write_region(tmp_path)
     uri = pathlib.Path(path).as_uri()

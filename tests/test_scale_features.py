@@ -702,7 +702,10 @@ def test_triangle_counts_plan_is_truncated_and_equi_join_only(spark):
     oriented relations 2-3x each; lineage truncation must keep the
     final plan from replaying candidate generation per reference
     (untruncated this plan measured 713 nodes), and every join must be
-    an equi-join AQE can skew-split — never nested-loop/cartesian."""
+    an equi-join — never nested-loop/cartesian.  The closing join's
+    probe side is the user-pinned REPARTITION_BY_NUM exchange, which
+    AQE neither coalesces nor skew-splits (by design: see the width pin
+    below)."""
     from parquet_to_sql_spark.queries.registry import get
 
     plan = _formatted_plan(get("dedup_graph_triangles").build(spark, SF_SMOKE))

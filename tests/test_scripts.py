@@ -97,3 +97,18 @@ def test_gen_plans_masks_plan_ids():
     )
     # two dumps that differ only in the counters mask to the same text
     assert gp.mask_plan_ids(plan.replace("605", "9")) == gp.mask_plan_ids(plan)
+
+
+def test_gen_plans_clips_at_a_whole_line():
+    gp = _load(REPO / "scripts" / "gen_plans.py")
+    plan = "\n".join(f"({i}) Project [k#{i}]" for i in range(1, 8))
+    assert gp.clip_plan(plan, limit=len(plan)) == plan
+    lines = plan.splitlines()
+    # the limit falls inside line 4: lines 1-3 are kept whole
+    limit = len("\n".join(lines[:3])) + 5
+    assert gp.clip_plan(plan, limit=limit) == "\n".join(lines[:3] + ["... (4 more lines)"])
+    # exactly three whole lines fit
+    limit = len("\n".join(lines[:3]))
+    assert gp.clip_plan(plan, limit=limit) == "\n".join(lines[:3] + ["... (4 more lines)"])
+    # a first line longer than the limit leaves only the marker
+    assert gp.clip_plan(plan, limit=3) == "... (7 more lines)"
