@@ -450,6 +450,18 @@ _REVERIFY_QUEUED: tuple[str, ...] = (
     #    inline rejection note only; driver-sim re-verified green in
     #    the r14 session.
     "ev_peak_concurrency",
+    # Their small driver-side relation (a band table, the Benford
+    # expectations, the learned merge table, the landed import rows,
+    # the footer file list, the blocklist) now goes through
+    # session.local_relation, an Arrow LocalRelation, instead of a
+    # parallelized Python list: same values and DDL types, re-checked
+    # by scripts/verify_driver.py and sf0.1 oracle parity.
+    "profile_benford_digits",
+    "text_bpe_train_merges",
+    "join_range_bands",
+    "import_job_spec_roundtrip",
+    "source_parquet_footer_stats",
+    "pipeline_domain_cap_screen",
 )
 
 

@@ -56,8 +56,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    apply_runtime_confs(spark)
-    df = read_parquet(spark, table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name), apply_runtime_confs(spark))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -34,6 +34,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from parquet_to_sql_spark.session import local_relation
+
 
 def prefix_sum(
     df: DataFrame,
@@ -46,9 +48,12 @@ def prefix_sum(
 
     Scale shape: one range-partitioning exchange on the order key,
     one keyed in-partition window, one O(#partitions) driver collect
-    for the offsets, one broadcast join back.  No task ever holds more
-    than its own partition; contrast with the unpartitioned-window
-    formulation, which is a single-task global sort.
+    for the offsets, one broadcast join back.  The offsets go back to
+    the JVM as a ``(_pid int, _off long)`` Arrow LocalRelation
+    (``session.local_relation``), so the join-back runs no
+    Python-worker task.  No task ever holds more than its own
+    partition; contrast with the unpartitioned-window formulation,
+    which is a single-task global sort.
 
     The localCheckpoint materializes the ranged relation once because
     TWO actions consume it (partition totals, then the windowed pass)
@@ -90,9 +95,7 @@ def prefix_sum(
         offsets[pid] = running
         running += totals[pid]
     offsets_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-        )
+        local_relation(spark, offsets.items(), "_pid int, _off long")
     )
 
     w = Window.partitionBy("_pid").orderBy(*order_cols).rowsBetween(

@@ -12,6 +12,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from parquet_to_sql_spark.session import local_relation
+
 
 def salted_join(
     big: DataFrame,
@@ -160,9 +162,12 @@ def sequence_gaps(df: DataFrame, key: str) -> DataFrame:
     an ordinary keyed lead window, then close the seams with the
     O(#partitions) boundary rows — each partition's (min, max) —
     collected to the driver (the bounded-collect class) and compared
-    pairwise in sorted order.  No task ever sorts more than its own
-    partition; the oracle is the unpartitioned lead() spelling DuckDB
-    can afford at fixture scale.
+    pairwise in sorted order.  The seam gaps go back as a
+    ``(gap_start long, gap_end long)`` Arrow LocalRelation
+    (``session.local_relation``; empty when no seam has a gap), so
+    the union runs no Python-worker task.  No task ever sorts more
+    than its own partition; the oracle is the unpartitioned lead()
+    spelling DuckDB can afford at fixture scale.
 
     The localCheckpoint pins the non-deterministic range boundaries so
     the window pass and the boundary aggregation see the SAME routing
@@ -210,9 +215,7 @@ def sequence_gaps(df: DataFrame, key: str) -> DataFrame:
         for (_, _, prev_hi), (_, lo, _) in zip(bounds, bounds[1:])
         if lo > prev_hi + 1
     ]
-    seam_df = spark.createDataFrame(
-        seams or [], "gap_start long, gap_end long"
-    )
+    seam_df = local_relation(spark, seams, "gap_start long, gap_end long")
     return inner.unionByName(seam_df).select(
         "gap_start",
         "gap_end",

@@ -21,6 +21,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from parquet_to_sql_spark.session import local_relation
+
 # Vendored Mozilla Public Suffix List (public data, MPL-2.0, from
 # https://publicsuffix.org/list/ via the Debian `publicsuffix`
 # package; the file retains its license header).  Versioned data: to
@@ -144,7 +146,8 @@ def _psl_rule_frames(spark, icann_only: bool) -> dict[int, DataFrame]:
         for key, (p, w, x) in rules.items():
             by_depth.setdefault(key.count(".") + 1, []).append((key, p, w, x))
         per_session[icann_only] = {
-            d: spark.createDataFrame(
+            d: local_relation(
+                spark,
                 by_depth[d],
                 f"_pslk{d} string, _pslp{d} boolean, "
                 f"_pslw{d} boolean, _pslx{d} boolean",

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from parquet_to_sql_spark.catalog import load_table
 from parquet_to_sql_spark.queries.registry import query
+from parquet_to_sql_spark.session import local_relation
 
 
 @query(
@@ -1436,7 +1437,8 @@ def profile_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = c.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
     t = o.agg(F.sum("n").alias("tot"))
-    e = spark.createDataFrame(
+    e = local_relation(
+        spark,
         [(d, p) for d, p in enumerate(_BENFORD_PPM, 1)],
         "digit bigint, benford_ppm bigint",
     )

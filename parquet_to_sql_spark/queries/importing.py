@@ -16,6 +16,7 @@ from parquet_to_sql_spark.catalog import load_table
 from parquet_to_sql_spark.importer import project_rename
 from parquet_to_sql_spark.normalize import TIMESTAMP_FMT, copy_value
 from parquet_to_sql_spark.queries.registry import query
+from parquet_to_sql_spark.session import local_relation
 
 
 @query(
@@ -93,7 +94,6 @@ def import_job_spec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     import duckdb
-    import pandas as pd
 
     from parquet_to_sql_spark.job import ImportJob
 
@@ -113,16 +113,14 @@ def import_job_spec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).to_json()
         result = ImportJob.from_json(wire).handle(spark=spark)
         con = duckdb.connect(db)
-        pdf: pd.DataFrame = con.execute(
-            "SELECT r_regionkey, region_name FROM region_import"
-        ).df()
+        rows = con.execute("SELECT r_regionkey, region_name FROM region_import").fetchall()
         con.close()
-        if result.rows_imported != len(pdf):
+        if result.rows_imported != len(rows):
             raise RuntimeError(
                 f"job accounting drift: result says {result.rows_imported}, "
-                f"table holds {len(pdf)}"
+                f"table holds {len(rows)}"
             )
-    return spark.createDataFrame(pdf)
+    return local_relation(spark, rows, "r_regionkey bigint, region_name string")
 
 
 @query(
@@ -687,8 +685,8 @@ def source_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths = [
         (t, key, f"{sf_dir}/{t}.parquet") for t, key in _FOOTER_TABLES
     ]
-    files = spark.createDataFrame(
-        paths, "tbl string, key_col string, path string"
+    files = local_relation(
+        spark, paths, "tbl string, key_col string, path string"
     ).repartition(len(paths))
 
     def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

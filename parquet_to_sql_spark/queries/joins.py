@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from parquet_to_sql_spark.catalog import load_table
 from parquet_to_sql_spark.queries.registry import query
+from parquet_to_sql_spark.session import local_relation
 
 from parquet_to_sql_spark.queries.relational import (  # shared — do not fork
     DISC_PRICE,
@@ -282,7 +283,8 @@ def join_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     The band table is broadcast, so the theta-join is a map-side
     BroadcastNestedLoopJoin — no shuffle of lineitem at any scale."""
     li = load_table(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(
+    bands = local_relation(
+        spark,
         [("small", 0.0, 20000.0), ("medium", 20000.0, 60000.0), ("large", 60000.0, 1e18)],
         "band string, lo double, hi double",
     )

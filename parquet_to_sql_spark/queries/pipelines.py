@@ -18,6 +18,7 @@ from parquet_to_sql_spark.queries.text import (
     _DUCK_GOPHER,
     _DUCK_QUALITY,
 )
+from parquet_to_sql_spark.session import local_relation
 
 
 @query(
@@ -1097,9 +1098,7 @@ def pipeline_domain_cap_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_host",
         "domain",
     ).drop("_host")
-    blocked = spark.createDataFrame(
-        [("src3.com",), ("src7.net",)], "domain string"
-    )
+    blocked = local_relation(spark, [("src3.com",), ("src7.net",)], "domain string")
     screened = apply_domain_blocklist(d, "domain", blocked)
     counts = domain_counts(screened, "domain")
     kept = cap_per_domain(

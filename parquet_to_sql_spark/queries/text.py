@@ -21,6 +21,7 @@ from parquet_to_sql_spark.operators.text import (
     ws_tokens,
 )
 from parquet_to_sql_spark.queries.registry import query
+from parquet_to_sql_spark.session import local_relation
 
 # ---- shared DuckDB fragments -------------------------------------------
 DUCK_FOLD = (
@@ -1412,8 +1413,8 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("wc"))
     )
     merges, _ = bpe_train_merges(vocab, _BPE_TRAIN_ITERS)
-    return spark.createDataFrame(
-        merges, "step int, left_sym string, right_sym string, merge_count bigint"
+    return local_relation(
+        spark, merges, "step int, left_sym string, right_sym string, merge_count bigint"
     ).orderBy("step")
 
 

@@ -22,8 +22,10 @@ from __future__ import annotations
 import os
 import re
 import weakref
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Runtime-settable SQL confs every entry point applies, so the engine
 # behaves identically under a session we build OR one handed to us
@@ -72,23 +74,52 @@ def conf_settings_text(spark: SparkSession) -> str:
     return settings.toString()
 
 
-def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply engine confs to an externally-built session (best effort).
-    Every read path calls this, so it reads the session's confs once
-    and sets only those absent or set to another value: a session that
-    already holds them costs one py4j call, and a conf the caller
-    changed between reads is put back."""
+def apply_runtime_confs(spark: SparkSession) -> str:
+    """Apply engine confs to an externally-built session (best effort)
+    and return the session's conf text (``conf_settings_text``) as it
+    stands after.  Every read path calls this, so it reads the
+    session's confs once and sets only those absent or set to another
+    value: a session that already holds them costs one py4j call, and
+    a conf the caller changed between reads is put back (the text is
+    then read again, so it shows the restored value)."""
     text = conf_settings_text(spark)
+    changed = False
     for k, v in RUNTIME_CONFS.items():
         m = _RUNTIME_PATTERNS[k].search(text)
         if m and m.group(1) == v:
             continue
         try:
             spark.conf.set(k, v)
+            changed = True
         except Exception:
             # Static conf on this build — skip; builder path sets it.
             pass
-    return spark
+    return conf_settings_text(spark) if changed else text
+
+
+def local_relation(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A small driver-side relation (``rows`` of tuples typed by the
+    ``ddl`` schema, e.g. ``"_pid int, _off long"``) as a JVM
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, ddl)`` parallelizes the list and
+    pickles it through a Python ``map``, so the plan holds a
+    ``LogicalRDD`` and every action over it starts Python-worker tasks
+    just to hand the JVM a few rows.  A ``pyarrow.Table`` is shipped to
+    the JVM once, as Arrow batches, and planned as a ``LocalRelation``
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says (a
+    pandas frame is not: with that conf off it takes the list path).
+    Every ``createDataFrame`` in the package goes through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(
@@ -146,4 +177,5 @@ def get_spark(
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    return apply_runtime_confs(spark)
+    apply_runtime_confs(spark)
+    return spark

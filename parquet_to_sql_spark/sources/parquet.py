@@ -68,22 +68,30 @@ def file_signature(path: str) -> tuple[tuple[str, int, int], ...]:
     return tuple(sig)
 
 
-def inference_confs(spark: SparkSession) -> tuple[str | None, ...]:
+def inference_confs(
+    spark: SparkSession, conf_text: str | None = None
+) -> tuple[str | None, ...]:
     """The values set for ``_INFERENCE_CONFS`` in this session, None
-    where a conf is unset (so at its default), read in ONE py4j round
-    trip (``session.conf_settings_text``), searched for each key.  A conf
-    set back to its default reads differently from an unset one, which
-    costs at most one extra inference and never reuses a schema
-    inferred under other values."""
-    text = conf_settings_text(spark)
+    where a conf is unset (so at its default), searched for each key
+    in ``conf_text``: the session's conf map as
+    ``session.conf_settings_text`` renders it, read here in ONE py4j
+    round trip when the caller has none.  A conf set back to its
+    default reads differently from an unset one, which costs at most
+    one extra inference and never reuses a schema inferred under
+    other values."""
+    text = conf_settings_text(spark) if conf_text is None else conf_text
     return tuple(m.group(1) if (m := p.search(text)) else None for p in _CONF_PATTERNS)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, path: str, conf_text: str | None = None
+) -> DataFrame:
     """``spark.read.parquet(path)`` that infers a local path's schema
     once per session.  Later reads of the same unchanged files, under
     the same inference confs, pass the remembered schema and skip
-    Spark's footer-inference job.  Each call still builds a new
+    Spark's footer-inference job.  ``conf_text`` is the session's conf
+    map a caller has just read (``apply_runtime_confs`` returns it);
+    without it the confs are read here.  Each call still builds a new
     DataFrame (fresh attribute IDs, its own file listing), so
     self-joins of two reads resolve as before.  URI paths
     (``s3a://``, ``hdfs://``, ...) and paths matching no local file
@@ -93,7 +101,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     sig = file_signature(path)
     if not sig:
         return spark.read.parquet(path)
-    confs = inference_confs(spark)
+    confs = inference_confs(spark, conf_text)
     # two threads missing at once both infer and store equal entries
     memo = _SCHEMAS.setdefault(spark, {})
     key = os.path.abspath(path)
@@ -130,8 +138,7 @@ class ParquetSource:
         return os.path.exists(path) or bool(_glob.glob(path))
 
     def load(self) -> DataFrame:
-        apply_runtime_confs(self.spark)
-        return read_parquet(self.spark, self.path)
+        return read_parquet(self.spark, self.path, apply_runtime_confs(self.spark))
 
     def columns(self) -> list[str]:
         """Ordered column names (≈ ParquetRowReader::columns()); from

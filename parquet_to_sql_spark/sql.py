@@ -24,7 +24,8 @@ from parquet_to_sql_spark.sources.parquet import ParquetSource
 
 class Engine:
     def __init__(self, spark: SparkSession):
-        self.spark = apply_runtime_confs(spark)
+        apply_runtime_confs(spark)
+        self.spark = spark
         self._tables: dict[str, str] = {}
 
     def register(self, name: str, path: str) -> None:

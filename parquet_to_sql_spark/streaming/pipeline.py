@@ -33,7 +33,7 @@ from parquet_to_sql_spark.session import apply_runtime_confs
 from parquet_to_sql_spark.sources.parquet import read_parquet
 
 
-def _probe_schema(spark: SparkSession, path: str):
+def _probe_schema(spark: SparkSession, path: str, conf_text: str):
     """Batch footer-schema probe for a file-source stream (no data
     scan).  Returns None ONLY for the two genuinely-benign 'no input
     yet' conditions — missing path, or a directory with no readable
@@ -45,7 +45,7 @@ def _probe_schema(spark: SparkSession, path: str):
     from pyspark.errors import AnalysisException
 
     try:
-        return read_parquet(spark, path).schema
+        return read_parquet(spark, path, conf_text).schema
     except AnalysisException as exc:
         cond = exc.getCondition() or ""
         if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
@@ -75,8 +75,7 @@ def events_stream(spark: SparkSession, path: str) -> DataFrame:
       * adjusted micros -> already TimestampType.
     Batch and streaming therefore agree on event time for every shape.
     """
-    apply_runtime_confs(spark)
-    probed = _probe_schema(spark, path)
+    probed = _probe_schema(spark, path, apply_runtime_confs(spark))
     if probed is None:
         # no files yet: declare the current fixture shape and let the
         # stream idle until data lands
@@ -379,8 +378,7 @@ def documents_stream(spark: SparkSession, path: str) -> DataFrame:
     back to the fixture schema ONLY when no files have landed yet —
     other probe failures propagate — so the stream can start before
     its producer without masking real read errors)."""
-    apply_runtime_confs(spark)
-    schema = _probe_schema(spark, path)
+    schema = _probe_schema(spark, path, apply_runtime_confs(spark))
     if schema is None:
         return spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"

@@ -947,6 +947,67 @@ def test_sequence_gaps_ignores_null_keys(spark):
     assert got == [(3, 4, 2), (6, 8, 3)]
 
 
+# (keys, shuffle partitions): the degenerate inputs of the two-level
+# scans.  "seam_gaps_only" is four 10-key runs over 4 partitions: with
+# every row sampled, range partitioning puts one run in each
+# partition, so each gap is found only at a seam.
+_TWO_LEVEL_CASES = {
+    "empty": ([], 4),
+    "all_null_keys": ([None] * 50, 4),
+    "single_row": ([7], 4),
+    "more_partitions_than_rows": ([3, 5, 6, 10, 11], 16),
+    "seam_gaps_only": ([k for base in (0, 20, 40, 60) for k in range(base, base + 10)], 4),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_TWO_LEVEL_CASES))
+def test_two_level_scans_on_degenerate_inputs(spark, case):
+    """prefix_sum and sequence_gaps vs their sequential references on
+    inputs that leave the driver-side offsets/seams relation empty,
+    all-NULL, one row, or made only of seams."""
+    import pyspark.sql.functions as F
+
+    from parquet_to_sql_spark.operators.prefix import prefix_sum
+    from parquet_to_sql_spark.operators.relational import sequence_gaps
+    from parquet_to_sql_spark.session import local_relation
+
+    keys, n_parts = _TWO_LEVEL_CASES[case]
+    rows = [(k, i, 3 * i + 1) for i, k in enumerate(keys)]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    try:
+        df = local_relation(spark, rows, "k long, tb long, w long")
+        if case == "seam_gaps_only":
+            runs = sorted(
+                (r.lo, r.hi)
+                for r in df.repartitionByRange(n_parts, "k")
+                .groupBy(F.spark_partition_id().alias("p"))
+                .agg(F.min("k").alias("lo"), F.max("k").alias("hi"))
+                .collect()
+            )
+            assert runs == [(0, 9), (20, 29), (40, 49), (60, 69)]
+
+        # NULL keys sort first, as in ORDER BY k, tb
+        cum, want_sums = 0, {}
+        for k, tb, w in sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0, r[1])):
+            cum += w
+            want_sums[tb] = cum
+        got_sums = {
+            r.tb: r.running_total
+            for r in prefix_sum(df, ["k", "tb"], "w").collect()
+        }
+        assert got_sums == want_sums
+
+        uniq = sorted({k for k in keys if k is not None})
+        want_gaps = [(a + 1, b - 1, b - a - 1) for a, b in zip(uniq, uniq[1:]) if b > a + 1]
+        got_gaps = sorted(
+            (r.gap_start, r.gap_end, r.gap_len) for r in sequence_gaps(df, "k").collect()
+        )
+        assert got_gaps == want_gaps
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_grouped_prefix_sum_matches_bruteforce(spark):
     """grouped_prefix_sum vs sequential per-group running sums on a
     skewed random input (one hot group holding most rows — the case a

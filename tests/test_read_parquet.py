@@ -182,6 +182,61 @@ def test_runtime_confs_set_only_what_a_caller_changed(spark, tmp_path, monkeypat
         spark.conf.set(key, "true")
 
 
+class _CountingSettings:
+    """Stands in for a session's cached conf-map handle and counts
+    its renderings, i.e. the conf-map reads."""
+
+    def __init__(self, handle):
+        self.handle, self.reads = handle, 0
+
+    def toString(self):
+        self.reads += 1
+        return self.handle.toString()
+
+
+def test_one_conf_map_read_per_load(spark, tmp_path, monkeypatch):
+    """A load reads the session's conf map once: ``apply_runtime_confs``
+    hands its read to ``read_parquet``, and reads again only after it
+    has put a conf back.  A runtime conf flipped between loads is
+    restored and keys the schema memo by its restored value (a hit);
+    a flipped inference-only conf keys it by the new value (a miss)."""
+    from parquet_to_sql_spark import session
+
+    path = _write_region(tmp_path)
+    loads = (
+        lambda: load_table(spark, str(tmp_path), "region"),
+        lambda: ParquetSource(spark, path).load(),
+    )
+    loads[0]()
+    settings = _CountingSettings(session._SETTINGS[spark])
+    monkeypatch.setitem(session._SETTINGS, spark, settings)
+
+    def reads_and_jobs(load):
+        settings.reads = 0
+        _, n_jobs = _jobs(spark, load)
+        return settings.reads, n_jobs
+
+    restored = "spark.sql.legacy.parquet.nanosAsLong"
+    inference_only = "spark.sql.parquet.binaryAsString"
+    assert restored in _INFERENCE_CONFS and restored in session.RUNTIME_CONFS
+    assert inference_only in _INFERENCE_CONFS
+    assert inference_only not in session.RUNTIME_CONFS
+    was = spark.conf.get(inference_only)
+    try:
+        for load in loads:
+            assert reads_and_jobs(load) == (1, 0)
+            spark.conf.set(restored, "false")
+            assert reads_and_jobs(load) == (2, 0)
+            assert spark.conf.get(restored) == "true"
+            spark.conf.set(inference_only, "true")
+            assert reads_and_jobs(load) == (1, 1)
+            spark.conf.set(inference_only, was)
+            assert reads_and_jobs(load) == (1, 1)
+    finally:
+        spark.conf.set(restored, "true")
+        spark.conf.set(inference_only, was)
+
+
 def test_uri_path_bypasses_memo(spark, tmp_path):
     path = _write_region(tmp_path)
     uri = pathlib.Path(path).as_uri()
