@@ -58,7 +58,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("table")
     ap.add_argument("--map", action="append", default=[], metavar="SRC=DST")
     ap.add_argument("--connection",
-                    help="JDBC URL / Postgres DSN / DuckDB file per --sink")
+                    help="Postgres DSN / DuckDB file / lake directory per --sink")
     ap.add_argument("--batch", type=int)
     ap.add_argument("--timeout", type=int)
     ap.add_argument("--truncate", action="store_true")

@@ -41,7 +41,7 @@ _SPEC_VERSION = 1
 class ImportJob:
     """One queued import (ImportParquetJob.php:15-25 field-for-field;
     `sink`/`batch_size`/`timeout_s` extend it because the Spark engine
-    has five sink kinds, config.SINK_KINDS, behind the reference's
+    has four sink kinds, config.SINK_KINDS, behind the reference's
     single connection)."""
 
     path: str

@@ -10,7 +10,9 @@ The reference normalizes row values twice (ParquetImporter.php):
     text protocol.
 
 Here both become vectorized Column expressions (JVM-side, codegen —
-never per-row Python), applied by the Importer before a sink.
+never per-row Python): ``copy_value`` renders COPY text and
+``sql_literal`` its INSERT twin, a SQL literal, so the two PostgreSQL
+sinks put the same values into the server.
 """
 
 from __future__ import annotations
@@ -73,6 +75,29 @@ def copy_escape(col: Column) -> Column:
     return F.when(col.rlike("[\\\\\t\r\n]"), escaped).otherwise(col)
 
 
+def interval_text(col: Column, dt: T.DataType) -> Column:
+    """An interval as sign-safe PostgreSQL interval input: its total
+    ``'<n> microseconds'`` (day-time) or ``'<n> months'`` (year-month).
+
+    Spark's cast-to-string is the SQL literal form ("INTERVAL '-1
+    02:03:04' DAY TO SECOND"); neither it nor its quoted inner value is
+    safe PG input — PG (default IntervalStyle) treats each field as
+    independently signed, so '-1 02:03:04' parses as -1 days
+    +02:03:04, silently corrupting negative intervals ('-1-2' likewise
+    reads as -1 year +2 mons).  A day-time value is cast to DAY TO
+    SECOND (so the decimal cast yields seconds for every
+    start/end-field shape), then to DECIMAL(28,6) — exact over the full
+    ±~106M-day range — and scaled to integral microseconds; a
+    year-month value cast to a MONTH end field gives its exact total
+    months for both YEAR and YEAR TO MONTH shapes.  Neither form holds
+    a COPY special or a quote."""
+    if isinstance(dt, T.YearMonthIntervalType):
+        months = col.cast("interval month").cast("int")
+        return F.concat(months.cast("string"), F.lit(" months"))
+    us = (col.cast("interval day to second").cast("decimal(28,6)") * 1000000).cast("long")
+    return F.concat(us.cast("string"), F.lit(" microseconds"))
+
+
 def copy_value(col: Column, dt: T.DataType) -> Column:
     """COPY-path rendering of one column to its text-protocol form
     (formatCopyValue parity): null -> \\N, bool -> 1/0, timestamp ->
@@ -93,29 +118,8 @@ def copy_value(col: Column, dt: T.DataType) -> Column:
         # (The leading backslash itself must be escaped on the wire,
         # hence the literal \\x.)
         rendered = F.concat(F.lit("\\\\x"), F.lower(F.hex(col)))
-    elif isinstance(dt, T.DayTimeIntervalType):
-        # Spark's cast-to-string is the SQL literal form
-        # ("INTERVAL '-1 02:03:04' DAY TO SECOND"); neither it nor its
-        # quoted inner value is safe PG input — PG (default
-        # IntervalStyle) treats each field as independently signed, so
-        # '-1 02:03:04' parses as -1 days +02:03:04, silently
-        # corrupting negative intervals.  Render the total-microsecond
-        # count instead: cast to DAY TO SECOND (so the decimal cast
-        # yields seconds for every start/end-field shape), then to
-        # DECIMAL(28,6) — exact over the full ±~106M-day range — and
-        # scale to integral microseconds.  '<n> microseconds' is
-        # unambiguous, sign-safe PG interval input with no COPY
-        # specials.
-        us = (col.cast("interval day to second").cast("decimal(28,6)") * 1000000).cast(
-            "long"
-        )
-        rendered = F.concat(us.cast("string"), F.lit(" microseconds"))
-    elif isinstance(dt, T.YearMonthIntervalType):
-        # Same sign hazard for '-1-2' (PG: -1 year +2 mons); render the
-        # total-month count — cast to MONTH end field gives exact total
-        # months for both YEAR and YEAR TO MONTH shapes.
-        months = col.cast("interval month").cast("int")
-        rendered = F.concat(months.cast("string"), F.lit(" months"))
+    elif isinstance(dt, (T.DayTimeIntervalType, T.YearMonthIntervalType)):
+        rendered = interval_text(col, dt)
     elif isinstance(dt, (T.NumericType, T.DateType)):
         # provably no COPY specials in their string forms; skipping the
         # escape keeps the hot render path one expression per column
@@ -139,3 +143,31 @@ def copy_lines(df: DataFrame) -> DataFrame:
     the socket and never builds a per-row object."""
     parts = [copy_value(F.col(f.name), f.dataType) for f in df.schema.fields]
     return df.select(F.concat_ws("\t", *parts).alias("line"))
+
+
+def _quoted(text: Column) -> Column:
+    """``'text'`` with every ``'`` doubled (the INSERT sink turns
+    standard_conforming_strings on, so backslashes stay literal)."""
+    return F.concat(F.lit("'"), F.replace(text, F.lit("'"), F.lit("''")), F.lit("'"))
+
+
+def sql_literal(col: Column, dt: T.DataType) -> Column:
+    r"""INSERT-path rendering of one column to a PostgreSQL SQL literal,
+    the twin of ``copy_value``: null -> NULL, bool -> TRUE/FALSE,
+    binary -> bytea hex ``'\x...'``, integers and decimals -> their
+    text, everything else quoted text.  Floats are quoted too, so
+    float8in/float4in read -0.0, NaN, ±Infinity and subnormals from
+    the same text COPY sends (unquoted, ``-0.0`` is the negation of
+    ``0.0`` and lands as +0).  Nested values and timestamps take
+    ``normalize_column``'s form, intervals ``interval_text``'s."""
+    if isinstance(dt, T.BooleanType):
+        rendered = F.when(col, F.lit("TRUE")).when(~col, F.lit("FALSE"))
+    elif isinstance(dt, (T.IntegralType, T.DecimalType)):
+        rendered = col.cast("string")
+    elif isinstance(dt, T.BinaryType):
+        rendered = F.concat(F.lit("'\\x"), F.lower(F.hex(col)), F.lit("'"))
+    elif isinstance(dt, (T.DayTimeIntervalType, T.YearMonthIntervalType)):
+        rendered = _quoted(interval_text(col, dt))
+    else:
+        rendered = _quoted(normalize_column(col, dt).cast("string"))
+    return F.coalesce(rendered, F.lit("NULL"))

@@ -37,6 +37,13 @@ from pyspark.sql import DataFrame, Window
 from parquet_to_sql_spark.session import local_relation
 
 
+def _running(local, off):
+    """A row's running total from its in-partition prefix and its
+    partition's offset, either of which is NULL when it covers only
+    NULL values — what ``SUM(v) OVER (ORDER BY k)`` returns."""
+    return F.coalesce(local + off, local, off).cast("long")
+
+
 def prefix_sum(
     df: DataFrame,
     order_cols: list[str],
@@ -90,10 +97,13 @@ def prefix_sum(
         .agg(F.sum(value_col).alias("t"))
         .collect()
     }
-    running, offsets = 0, {}
+    # SUM semantics: NULL values are skipped, and the offset stays NULL
+    # until some earlier partition holds a non-NULL value
+    running, offsets = None, {}
     for pid in sorted(totals):
         offsets[pid] = running
-        running += totals[pid]
+        if totals[pid] is not None:
+            running = totals[pid] if running is None else running + totals[pid]
     offsets_df = F.broadcast(
         local_relation(spark, offsets.items(), "_pid int, _off long")
     )
@@ -104,7 +114,7 @@ def prefix_sum(
     return (
         staged.withColumn("_local", F.sum(value_col).over(w))
         .join(offsets_df, "_pid")
-        .withColumn(out_col, (F.col("_local") + F.col("_off")).cast("long"))
+        .withColumn(out_col, _running(F.col("_local"), F.col("_off")))
         .drop("_pid", "_local", "_off")
     )
 
@@ -168,7 +178,7 @@ def grouped_prefix_sum(
     offsets = totals.select(
         "_pid",
         *group_cols,
-        F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"),
+        F.sum("_t").over(w_off).alias("_off"),
     )
 
     w = (
@@ -193,7 +203,7 @@ def grouped_prefix_sum(
     return (
         staged.withColumn("_local", F.sum(value_col).over(w))
         .join(off, cond)
-        .withColumn(out_col, (F.col("_local") + F.col("_off")).cast("long"))
+        .withColumn(out_col, _running(F.col("_local"), F.col("_off")))
         .drop("_pid", "_local", "_off", "_opid",
               *[f"_og{i}" for i in range(len(group_cols))])
     )

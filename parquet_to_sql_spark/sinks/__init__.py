@@ -7,9 +7,11 @@ Here, one class per sink kind of config.SINK_KINDS:
                     fast path: Arrow batches in, one write per batch
                     transaction; psycopg or the stdlib pg_wire client)
                     — sink "copy"
-  * InsertSink    — the same per-partition batch loop sending
-                    multi-row INSERTs (sinks/insert_pg.py); sink "pg"
-                    probes the connection and picks CopySink or this
+  * InsertSink    — the same Arrow hand-off and per-partition batch
+                    loop, each batch one multi-row INSERT of VALUES
+                    tuples rendered in the JVM (sinks/insert_pg.py);
+                    sink "pg" probes the connection and picks CopySink
+                    or this
   * DuckDbSink    — driver-side batched INSERT into a local DuckDB
                     file; exercises the full normalize/batch/truncate
                     surface hermetically in tests — "duckdb"

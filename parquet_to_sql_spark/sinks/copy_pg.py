@@ -1,5 +1,5 @@
-r"""Postgres COPY sink — the scale fast path — and the batch loop both
-Postgres sinks share.
+r"""Postgres COPY sink — the scale fast path — and the Arrow hand-off and
+batch loop both Postgres sinks share.
 
 Reference semantics (ParquetImporter.php:90-121), generalized from
 one sequential writer to one writer per partition:
@@ -14,21 +14,21 @@ one sequential writer to one writer per partition:
   * a failed COPY rolls back its transaction and surfaces a
     RuntimeError naming the cause (:109-118).
 
-Arrow hand-off: the rendered frame reaches each writer through
-``DataFrame.mapInArrow`` as record batches of one string column,
-whose lines lie back to back in the column's data buffer.  A batch of
-``batch_size`` lines is therefore the byte range between two of the
-column's offsets, and its transaction sends it with ONE write: no
-Python object per row (line_bytes).  A batch that straddles two Arrow
-batches is joined from two slices.  Each writer returns its committed
-row count as one ``(rows,)`` record, summed on the driver.
+Arrow hand-off (``run_writers``): the rendered frame reaches each
+writer through ``DataFrame.mapInArrow`` as record batches of one
+string column, whose lines lie back to back in the column's data
+buffer.  A batch of ``batch_size`` lines is therefore the byte range
+between two of the column's offsets, and its transaction sends it
+with ONE write: no Python object per row (line_bytes).  A batch that
+straddles two Arrow batches is joined from two slices.  Each writer
+returns its committed row count as one ``(rows,)`` record, summed on
+the driver.
 
 ``batch_partition`` is the connect/cut/timeout/commit/rollback loop
 and ``PgBatchSink`` the write scaffolding around it; the COPY sink
 here and the INSERT fallback (sinks/insert_pg.py) differ only in how
-a frame is rendered, how it reaches the writer (Arrow batches here,
-Python Rows there: sql_literal needs Python values) and how one batch
-is sent.
+a frame is rendered (COPY text lines here, SQL-literal VALUES tuples
+there, both in the JVM) and how one batch is sent.
 
 Atomicity note (SURVEY.md §7 "what's hard" #1): the reference commits
 PER BATCH, so partial success is already its contract; with N
@@ -100,6 +100,18 @@ def line_bytes(arrays: Sequence[pa.Array]):
     return views[0] if len(views) == 1 else b"".join(views)
 
 
+def run_writers(rendered: DataFrame, fn: Callable[[Iterator[pa.RecordBatch]], int]) -> int:
+    """The sum of ``fn(batches)`` over every partition's Arrow record
+    batches (``mapInArrow``; each partition answers with one
+    ``(rows,)`` record).  An action's results come back once per
+    partition, so retried tasks don't double count."""
+
+    def run(batches):
+        yield _count_batch(fn(batches))
+
+    return sum(r.rows for r in rendered.mapInArrow(run, "rows long").collect())
+
+
 def _count_batch(n: int) -> pa.RecordBatch:
     """The one-row ``(rows,)`` record a writer answers with, built from
     its 8 bytes: converting a Python list instead (``pa.array``,
@@ -143,10 +155,10 @@ def _copy_stream(
 
 
 def cut_batches(chunks: Iterable[Sequence], batch_size: int) -> Iterator[list]:
-    """Regroup a partition's chunks (Arrow arrays, lists of rows) into
-    batches of exactly ``batch_size`` items, the last one possibly
-    shorter, however the chunks are sized.  A batch is the list of
-    chunk slices it covers; slicing an Arrow array copies nothing."""
+    """Regroup a partition's chunks (Arrow arrays) into batches of
+    exactly ``batch_size`` items, the last one possibly shorter,
+    however the chunks are sized.  A batch is the list of chunk slices
+    it covers; slicing an Arrow array copies nothing."""
     batch: list = []
     n = 0
     for chunk in chunks:
@@ -164,25 +176,27 @@ def cut_batches(chunks: Iterable[Sequence], batch_size: int) -> Iterator[list]:
 
 
 def batch_partition(
-    chunks: Iterable[Sequence],
+    batches: Iterable[pa.RecordBatch],
     *,
     dsn: str,
     batch_size: int,
     timeout_s: int,
     connection_factory: Callable[[str], object],
-    send: Callable[[object, list], None],
+    send: Callable[[object, bytes], None],
     command: str,
 ) -> int:
     """The per-partition batch-transaction loop of both Postgres sinks
     (the reference's flush loop, ParquetImporter.php:56-71 + :102-118).
 
-    Runs on an executor. One connection per partition; the chunks are
-    cut into batches of exactly batch_size items (cut_batches), and
-    each batch is one transaction with `SET LOCAL statement_timeout`,
-    ``send(cursor, batch)`` and a commit.  A failed batch rolls back
-    and raises ``RuntimeError("<command> command failed: ...")``,
+    Runs on an executor. One connection per partition; the rendered
+    lines of the partition's record batches (one string column, as
+    mapInArrow hands them over) are cut into batches of exactly
+    batch_size lines (cut_batches), and each batch is one transaction
+    with `SET LOCAL statement_timeout`, ``send(cursor, data)`` of the
+    batch's bytes (line_bytes) and a commit.  A failed batch rolls
+    back and raises ``RuntimeError("<command> command failed: ...")``,
     leaving prior batches committed.  An empty partition commits
-    nothing.  Returns the number of items COMMITTED.
+    nothing.  Returns the number of lines COMMITTED.
 
     Retry caveat (inherited from the reference's per-batch-commit
     contract): if a task dies AFTER some batches committed, Spark's
@@ -194,11 +208,11 @@ def batch_partition(
     conn = connection_factory(dsn)
     try:
         written = 0
-        for batch in cut_batches(chunks, batch_size):
+        for batch in cut_batches((b.column(0) for b in batches), batch_size):
             cur = conn.cursor()
             try:
                 cur.execute(f"SET LOCAL statement_timeout = {int(timeout_s * 1000)}")
-                send(cur, batch)
+                send(cur, line_bytes(batch))
                 conn.commit()
             except Exception as exc:
                 conn.rollback()
@@ -219,22 +233,20 @@ def copy_partition(
     timeout_s: int,
     connection_factory: Callable[[str], object],
 ) -> int:
-    """Send one partition's rendered lines — record batches of one
-    string column, as mapInArrow hands them over — in batch_size
-    transactions, each one COPY statement fed by one write of the
-    batch's bytes (batch_partition, line_bytes)."""
+    """Send one partition's rendered lines in batch_size transactions,
+    each one COPY statement fed by one write of the batch's bytes
+    (batch_partition)."""
     quoted_table = quote_identifier(table)
     quoted_columns = [quote_identifier(c) for c in columns]
     sql = f"COPY {quoted_table} ({', '.join(quoted_columns)}) FROM STDIN"
 
-    def send(cur, batch: list[pa.Array]) -> None:
+    def send(cur, data) -> None:
         _copy_stream(
-            cur, sql, [line_bytes(batch)],
-            quoted_table=quoted_table, quoted_columns=quoted_columns,
+            cur, sql, [data], quoted_table=quoted_table, quoted_columns=quoted_columns
         )
 
     return batch_partition(
-        (b.column(0) for b in batches), dsn=dsn, batch_size=batch_size,
+        batches, dsn=dsn, batch_size=batch_size,
         timeout_s=timeout_s, connection_factory=connection_factory, send=send,
         command="COPY",
     )
@@ -242,12 +254,11 @@ def copy_partition(
 
 class PgBatchSink:
     """Write scaffolding shared by the Postgres sinks: identifier
-    checks, driver-side truncate, ``num_writers`` repartition, and one
-    ``batch_partition`` writer per partition whose committed counts
-    the driver sums.  A subclass names its frame rendering
-    (``render``), its per-partition writer (``write_partition``) and,
-    when the writer takes something other than Rows, how partitions
-    reach it (``run_partitions``)."""
+    checks, driver-side truncate, and one ``batch_partition`` writer
+    per partition (``run_writers``) whose committed counts the driver
+    sums.  A subclass names its frame rendering to one ``line`` string
+    column (``render``) and its per-partition writer over that
+    column's Arrow batches (``write_partition``)."""
 
     render: Callable[[DataFrame], DataFrame]
     write_partition: Callable[..., int]
@@ -257,21 +268,17 @@ class PgBatchSink:
         dsn: str,
         batch_size: int = DEFAULT_BATCH_SIZE,
         timeout_s: int = DEFAULT_COPY_TIMEOUT,
-        num_writers: int | None = None,
         connection_factory: Callable[[str], object] | None = None,
     ):
         self.dsn = dsn
         self.batch_size = batch_size
         self.timeout_s = timeout_s
-        self.num_writers = num_writers
         self.connection_factory = connection_factory or _default_connection_factory
 
     def write(self, df: DataFrame, table: str, truncate: bool = False) -> int:
         """Write and return the number of rows actually committed:
         each partition's writer returns its committed count and the
-        driver sums them.  An action's results come back once per
-        partition, so retried tasks don't double count.  No second
-        source scan.
+        driver sums them (``run_writers``).  No second source scan.
         """
         assert_safe_table_name(table)
         columns = list(df.columns)
@@ -280,19 +287,11 @@ class PgBatchSink:
         assert_safe_column_names(columns)
         if truncate:
             self._execute_truncate(table)
-        rendered = self.render(df)
-        if self.num_writers:
-            rendered = rendered.repartition(self.num_writers)
-        return self.run_partitions(rendered, functools.partial(
+        return run_writers(self.render(df), functools.partial(
             self.write_partition, dsn=self.dsn, table=table, columns=columns,
             batch_size=self.batch_size, timeout_s=self.timeout_s,
             connection_factory=self.connection_factory,
         ))
-
-    @staticmethod
-    def run_partitions(rendered: DataFrame, fn: Callable[[Iterator], int]) -> int:
-        """The sum of ``fn(rows)`` over every partition's Row iterator."""
-        return sum(rendered.rdd.mapPartitions(lambda rows: [fn(rows)]).collect())
 
     def _execute_truncate(self, table: str) -> None:
         # Driver-side, once, before any writer starts
@@ -312,17 +311,6 @@ class CopySink(PgBatchSink):
 
     render = staticmethod(render_copy)
     write_partition = staticmethod(copy_partition)
-
-    @staticmethod
-    def run_partitions(rendered: DataFrame, fn: Callable[[Iterator], int]) -> int:
-        """The sum of ``fn(batches)`` over every partition's Arrow
-        record batches (``mapInArrow``; each partition answers with one
-        ``(rows,)`` record)."""
-
-        def run(batches):
-            yield _count_batch(fn(batches))
-
-        return sum(r.rows for r in rendered.mapInArrow(run, "rows long").collect())
 
     def write_idempotent(self, df: DataFrame, table: str, batch_id: int) -> int:
         """Exactly-once streaming micro-batch ingest, DISTRIBUTED: each
@@ -422,7 +410,7 @@ class CopySink(PgBatchSink):
             finally:
                 conn.close()
 
-        return self.run_partitions(render_copy(df), run)
+        return run_writers(render_copy(df), run)
 
     def write_atomic(self, df: DataFrame, table: str, suffix: str | None = None) -> int:
         """All-or-nothing load via staging table + atomic swap.

@@ -4,71 +4,54 @@ Reference parity: when the PDO driver lacks ``pgsqlCopyFromArray``
 the reference switches the SAME flush loop to a multi-row bulk
 INSERT through the query builder (ParquetImporter.php:98,123-125,
 documented README.md:70), with ``normalizeValue`` applied per value
-(:181-202).  This sink is that path over a real Postgres socket:
-rows are normalized DataFrame-side (normalize.normalize_for_insert —
-nested -> JSON text, timestamps -> the reference's ``Y-m-d H:i:s.uP``
-render), then each partition renders multi-row ``INSERT INTO ...
-VALUES`` statements and commits them in ``batch_size`` transactions
-with ``SET LOCAL statement_timeout`` — the same batching/transaction
-contract as the COPY fast path, just a slower wire encoding.
+(:181-202).  This sink is that path over a real Postgres socket.  The
+JVM renders every row to its ``(v1, v2, ...), `` VALUES tuple
+(normalize.sql_literal — nested -> JSON text, timestamps -> the
+reference's ``Y-m-d H:i:s.uP`` render, the twin of COPY's
+copy_value), and the rows reach each writer exactly as COPY lines do:
+Arrow batches of one string column (copy_pg.run_writers), cut into
+``batch_size`` transactions with ``SET LOCAL statement_timeout``.  A
+transaction sends the statement head plus its rows' byte range, the
+last separator dropped — the same batching/transaction contract as
+the COPY fast path, just a slower wire encoding.
 
 ``choose_sink`` reproduces the reference's runtime capability
 detection: probe one connection, use COPY when the cursor exposes a
 ``copy`` method, fall back to INSERT otherwise.
-
-Scale shape: identical to the COPY sink — one connection per
-partition, no driver-side row iteration; only the per-row encoding
-differs (SQL literals vs COPY text), which is exactly why COPY is
-the fast path and this is the fallback.
 """
 
 from __future__ import annotations
 
-import math
-from decimal import Decimal
-from itertools import chain, islice
 from typing import Callable, Iterable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from parquet_to_sql_spark.config import DEFAULT_BATCH_SIZE, DEFAULT_COPY_TIMEOUT
 from parquet_to_sql_spark.identifiers import quote_identifier
-from parquet_to_sql_spark.normalize import normalize_for_insert
+from parquet_to_sql_spark.normalize import sql_literal
 from parquet_to_sql_spark.sinks.copy_pg import (
+    CopySink,
     PgBatchSink,
     _default_connection_factory,
     batch_partition,
 )
 
+_SEP = ", "
 
-def sql_literal(v) -> str:
-    r"""Render one normalized value as a Postgres SQL literal.
 
-    After normalize_for_insert the only types left are None, bool,
-    int, float, Decimal, str (incl. JSON-rendered nested and
-    reference-format timestamps), and bytes for BinaryType.  Strings
-    escape by doubling single quotes (standard_conforming_strings,
-    the server default since 9.1, keeps backslashes literal); bytes
-    render as bytea hex input ('\x...').
-    """
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "'NaN'"
-        if math.isinf(v):
-            return "'Infinity'" if v > 0 else "'-Infinity'"
-        return repr(v)
-    if isinstance(v, (int, Decimal)):
-        return str(v)
-    if isinstance(v, (bytes, bytearray, memoryview)):
-        return "'\\x" + bytes(v).hex() + "'"
-    s = str(v)
-    return "'" + s.replace("'", "''") + "'"
+def render_insert(df: DataFrame) -> DataFrame:
+    """Each row as its VALUES tuple followed by the separator, in the
+    JVM: the one ``line`` column holds ``(v1, v2, ...), ``."""
+    values = [sql_literal(F.col(f.name), f.dataType) for f in df.schema.fields]
+    return df.select(
+        F.concat(F.lit("("), F.concat_ws(_SEP, *values), F.lit(")" + _SEP)).alias("line")
+    )
 
 
 def insert_partition(
-    rows: Iterable[tuple],
+    batches: Iterable[pa.RecordBatch],
     *,
     dsn: str,
     table: str,
@@ -77,39 +60,32 @@ def insert_partition(
     timeout_s: int,
     connection_factory: Callable[[str], object],
 ) -> int:
-    """Write one partition via multi-row INSERTs, one statement per
-    batch_size-row transaction (batch_partition, with the reference's
-    :123-125 fallback body).  Returns rows COMMITTED."""
+    """Write one partition's rendered tuples via multi-row INSERTs, one
+    statement per batch_size-row transaction (batch_partition, with the
+    reference's :123-125 fallback body).  Returns rows COMMITTED."""
     head = (
         f"INSERT INTO {quote_identifier(table)} "
         f"({', '.join(quote_identifier(c) for c in columns)}) VALUES "
     )
 
-    def send(cur, batch: list[list[tuple]]) -> None:
+    def send(cur, data) -> None:
         # sql_literal's quote-doubling framing requires it; a
         # server/pooler configured with scs=off would otherwise
         # let a trailing backslash escape the closing quote
         cur.execute("SET LOCAL standard_conforming_strings = on")
-        cur.execute(
-            head
-            + ", ".join(
-                "(" + ", ".join(sql_literal(v) for v in row) + ")"
-                for row in chain.from_iterable(batch)
-            )
-        )
+        cur.execute(head + str(memoryview(data)[: -len(_SEP)], "utf-8"))
 
-    rows = iter(rows)
     return batch_partition(
-        iter(lambda: list(islice(rows, batch_size)), []), dsn=dsn,
-        batch_size=batch_size, timeout_s=timeout_s,
-        connection_factory=connection_factory, send=send, command="INSERT",
+        batches, dsn=dsn, batch_size=batch_size,
+        timeout_s=timeout_s, connection_factory=connection_factory, send=send,
+        command="INSERT",
     )
 
 
 class InsertSink(PgBatchSink):
     """Bulk-INSERT sink with the CopySink ``write``/truncate surface."""
 
-    render = staticmethod(normalize_for_insert)
+    render = staticmethod(render_insert)
     write_partition = staticmethod(insert_partition)
 
 
@@ -140,14 +116,11 @@ def choose_sink(
     dsn: str,
     batch_size: int = DEFAULT_BATCH_SIZE,
     timeout_s: int = DEFAULT_COPY_TIMEOUT,
-    num_writers: int | None = None,
     connection_factory: Callable[[str], object] | None = None,
 ):
     """Probe one connection and return CopySink when COPY is
     available, InsertSink otherwise — degrade, don't fail
     (README.md:70)."""
-    from parquet_to_sql_spark.sinks.copy_pg import CopySink
-
     factory = connection_factory or _default_connection_factory
     conn = factory(dsn)
     try:
@@ -155,10 +128,4 @@ def choose_sink(
     finally:
         conn.close()
     cls = CopySink if has_copy else InsertSink
-    return cls(
-        dsn,
-        batch_size=batch_size,
-        timeout_s=timeout_s,
-        num_writers=num_writers,
-        connection_factory=factory,
-    )
+    return cls(dsn, batch_size=batch_size, timeout_s=timeout_s, connection_factory=factory)

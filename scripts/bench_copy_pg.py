@@ -94,7 +94,9 @@ def main() -> int:
             conn.commit()
             conn.close()
             t0 = time.monotonic()
-            written = CopySink(dsn, num_writers=writers).write(df, "lineitem_bench")
+            # one writer per partition: spread the raw rows over
+            # `writers` partitions, and the render runs after it
+            written = CopySink(dsn).write(df.repartition(writers), "lineitem_bench")
             dt = time.monotonic() - t0
             assert written == n, (written, n)
             results[label] = dt

@@ -4,6 +4,7 @@ INSERT normalization, identifier rejection, source validation."""
 
 from __future__ import annotations
 
+import ast
 import datetime
 import json
 import os
@@ -22,7 +23,7 @@ from parquet_to_sql_spark.identifiers import (
 from parquet_to_sql_spark.importer import Importer, project_rename
 from parquet_to_sql_spark.normalize import copy_lines
 from parquet_to_sql_spark.sinks.copy_pg import CopySink, copy_partition
-from parquet_to_sql_spark.sinks.insert_pg import insert_partition
+from parquet_to_sql_spark.sinks.insert_pg import InsertSink, insert_partition, render_insert
 from parquet_to_sql_spark.sinks.duckdb_sink import DuckDbSink
 from parquet_to_sql_spark.sources.parquet import ParquetSource
 
@@ -113,8 +114,9 @@ class FakeConn:
 
 
 def _line_batches(lines, per_batch=None, type=pa.string()):
-    """Rendered COPY lines as the record batches mapInArrow hands a
-    writer: one string column, ``per_batch`` lines per batch."""
+    """Rendered lines (COPY lines or INSERT tuples) as the record
+    batches mapInArrow hands a writer: one string column, ``per_batch``
+    lines per batch."""
     per_batch = per_batch or max(len(lines), 1)
     return [
         pa.RecordBatch.from_arrays([pa.array(lines[i : i + per_batch], type)], ["line"])
@@ -163,7 +165,7 @@ def test_copy_protocol_exact_wire_format():
 # The two callers of the shared batch loop (copy_pg.batch_partition):
 # (writer, item i of its input, the writer's input from a list of
 # items, the log event that sends one batch, what one batch's
-# transaction sends, the error prefix).  The COPY input comes in Arrow
+# transaction sends, the error prefix).  Both inputs come in Arrow
 # batches of 3 lines, so batches of 5 straddle them.
 _BATCH_WRITERS = [
     (
@@ -176,13 +178,10 @@ _BATCH_WRITERS = [
     ),
     (
         insert_partition,
-        lambda i: (i, "alice"),
-        iter,
+        lambda i: f"({i}, 'alice'), ",
+        lambda items: _line_batches(items, per_batch=3),
         lambda e: e[0] == "execute" and e[1].startswith("INSERT"),
-        lambda items: (
-            'INSERT INTO "t" ("id", "name") VALUES '
-            + ", ".join(f"({i}, '{name}')" for i, name in items)
-        ).encode(),
+        lambda items: ('INSERT INTO "t" ("id", "name") VALUES ' + "".join(items)[:-2]).encode(),
         "INSERT",
     ),
 ]
@@ -643,38 +642,93 @@ def test_copysink_sends_exact_copy_lines_bytes(spark, tmp_path, spelling):
         spark.conf.set(key, prev)
 
 
+def _sent_rows(sink_cls, txn):
+    """The rows one transaction sent: its COPY lines, or the VALUES
+    tuples of its INSERT, each with its separator back (as
+    ``render_insert`` renders it; the test values hold no ``), (``)."""
+    if sink_cls is CopySink:
+        return txn.splitlines(keepends=True)
+    body = txn.partition(b" VALUES ")[2]
+    return [b"(" + t + b"), " for t in body[1:-1].split(b"), (")]
+
+
 def test_copysink_batch_composition_independent_of_arrow_batches(spark, tmp_path):
     """However Spark cuts the rendered frame into Arrow batches
     (maxRecordsPerBatch 1, 3 or the default) and into partitions (1 or
-    4), the sink sends the same multiset of lines, and every
-    transaction holds exactly batch_size lines except the last of each
-    partition."""
+    4), both Postgres sinks send the same statements and the same
+    multiset of rendered rows, and every transaction holds exactly
+    batch_size rows except the last of each partition."""
     df = spark.createDataFrame(
         [(i, "\u00e9" * (i % 4) + "x\ty" * (i % 3)) for i in range(47)],
         "id long, s string",
     )
-    want = sorted((r.line + "\n").encode() for r in copy_lines(df).collect())
+    want = {
+        CopySink: sorted((r.line + "\n").encode() for r in copy_lines(df).collect()),
+        InsertSink: sorted(r.line.encode() for r in render_insert(df).collect()),
+    }
+    sent_txns = {}
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     try:
         for per_batch in ("1", "3", prev):
             spark.conf.set(key, per_batch)
             for parts in (1, 4):
-                logdir = tmp_path / f"{per_batch}_{parts}"
-                logdir.mkdir()
-                sink = CopySink("dsn://fake", batch_size=5, timeout_s=5,
-                                connection_factory=_file_logging_factory(str(logdir)))
-                assert sink.write(df.repartition(parts), "t") == 47
-                sent = []
-                for log in _conn_logs(logdir):
-                    txns = _txn_sends(log)
-                    sizes = [t.count(b"\n") for t in txns]
-                    assert all(n == 5 for n in sizes[:-1]), (per_batch, parts, sizes)
-                    assert all(0 < n <= 5 for n in sizes[-1:]), (per_batch, parts, sizes)
-                    sent += b"".join(txns).splitlines(keepends=True)
-                assert sorted(sent) == want, (per_batch, parts)
+                for cls in (CopySink, InsertSink):
+                    logdir = tmp_path / f"{cls.__name__}_{per_batch}_{parts}"
+                    logdir.mkdir()
+                    sink = cls("dsn://fake", batch_size=5, timeout_s=5,
+                               connection_factory=_file_logging_factory(str(logdir)))
+                    assert sink.write(df.repartition(parts), "t") == 47
+                    sent, all_txns = [], []
+                    for log in _conn_logs(logdir):
+                        txns = _txn_sends(log)
+                        sizes = [len(_sent_rows(cls, t)) for t in txns]
+                        assert all(n == 5 for n in sizes[:-1]), (cls, per_batch, parts, sizes)
+                        assert all(0 < n <= 5 for n in sizes[-1:]), (cls, per_batch, parts, sizes)
+                        sent += [row for t in txns for row in _sent_rows(cls, t)]
+                        all_txns += txns
+                    assert sorted(sent) == want[cls], (cls, per_batch, parts)
+                    assert sorted(all_txns) == sent_txns.setdefault(
+                        (cls, parts), sorted(all_txns)
+                    ), (cls, per_batch, parts)
     finally:
         spark.conf.set(key, prev)
+
+
+def test_postgres_sinks_hand_off_only_arrow_batches():
+    """No module under ``sinks/`` except the driver-side DuckDB sink
+    reads Python Rows (``.rdd`` or ``toLocalIterator``): both Postgres
+    sinks reach their writers through ``copy_pg.run_writers``."""
+    import pathlib
+
+    sinks = pathlib.Path(__file__).resolve().parent.parent / "parquet_to_sql_spark" / "sinks"
+    offenders = [
+        f"{f.name}:{n}"
+        for f in sorted(sinks.glob("*.py"))
+        if f.name != "duckdb_sink.py"
+        for n in _row_hand_offs(ast.parse(f.read_text(), str(f)))
+    ]
+    assert offenders == [], f"Row hand-off in a Postgres sink: {offenders}"
+
+
+def _row_hand_offs(tree):
+    """Line numbers of every ``.rdd`` / ``.toLocalIterator`` in ``tree``."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr in ("rdd", "toLocalIterator")
+    )
+
+
+def test_row_hand_off_guard_sees_every_spelling():
+    src = (
+        "a = df.rdd.mapPartitions(f).collect()\n"
+        "b = sum(1 for _ in df.toLocalIterator())\n"
+        "c = df.mapInArrow(f, 'rows long')\n"
+        "d = getattr(df, 'rdd_like')\n"
+        "e = self.render(df).rdd\n"
+    )
+    assert _row_hand_offs(ast.parse(src)) == [1, 2, 5]
 
 
 def test_import_from_csv_source_pluggable_reader(spark, tmp_path):
@@ -825,28 +879,41 @@ def test_avro_source_roundtrip_all_types(spark, tmp_path):
     assert ddl["nested"] == "struct<x:int,y:double>"
 
 
-def test_insert_sql_literal_branches():
-    """Literal rendering for the live INSERT fallback: every branch,
+def test_insert_sql_literal_branches(spark):
+    """Literal rendering for the live INSERT fallback, in the JVM
+    (normalize.sql_literal over a LocalRelation): every branch,
     including the ones a round-trip test can't pin (NaN/Infinity
-    spellings, memoryview, quote doubling)."""
-    import math
+    spellings, quoted floats, quote doubling)."""
     from decimal import Decimal
 
-    from parquet_to_sql_spark.sinks.insert_pg import sql_literal
+    import pyspark.sql.functions as F
 
-    assert sql_literal(None) == "NULL"
-    assert sql_literal(True) == "TRUE" and sql_literal(False) == "FALSE"
-    assert sql_literal(42) == "42"
-    assert sql_literal(Decimal("12345.67")) == "12345.67"
-    assert sql_literal(2.5) == "2.5"
-    assert sql_literal(float("nan")) == "'NaN'"
-    assert sql_literal(float("inf")) == "'Infinity'"
-    assert sql_literal(float("-inf")) == "'-Infinity'"
-    assert sql_literal(b"\x00A") == "'\\x0041'"
-    assert sql_literal(memoryview(b"\xff")) == "'\\xff'"
-    assert sql_literal("it's") == "'it''s'"
-    # backslashes stay literal under standard_conforming_strings
-    assert sql_literal("a\\b") == "'a\\b'"
+    from parquet_to_sql_spark.normalize import sql_literal
+    from parquet_to_sql_spark.session import local_relation
+
+    cases = [  # (DDL type, value, literal)
+        ("int", None, "NULL"),
+        ("boolean", True, "TRUE"),
+        ("boolean", False, "FALSE"),
+        ("bigint", 42, "42"),
+        ("decimal(7,2)", Decimal("12345.67"), "12345.67"),
+        ("double", 2.5, "'2.5'"),
+        ("double", -0.0, "'-0.0'"),
+        ("double", float("nan"), "'NaN'"),
+        ("double", float("inf"), "'Infinity'"),
+        ("double", float("-inf"), "'-Infinity'"),
+        ("binary", b"\x00A", "'\\x0041'"),
+        ("binary", b"\xff", "'\\xff'"),
+        ("string", "it's", "'it''s'"),
+        # backslashes stay literal under standard_conforming_strings
+        ("string", "a\\b", "'a\\b'"),
+    ]
+    ddl = ", ".join(f"c{i} {t}" for i, (t, _, _) in enumerate(cases))
+    df = local_relation(spark, [tuple(v for _, v, _ in cases)], ddl)
+    (row,) = df.select(
+        *[sql_literal(F.col(f.name), f.dataType) for f in df.schema.fields]
+    ).collect()
+    assert list(row) == [lit for _, _, lit in cases]
 
 
 def test_avro_mixed_schema_directory_projects_by_name(spark, tmp_path):

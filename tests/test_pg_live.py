@@ -9,7 +9,9 @@ tests boot a throwaway cluster (unix socket only — no TCP port to
 collide on), run the REAL sink through Spark executors using the
 pure-stdlib wire client (sinks/pg_wire.py), and verify server-side
 state: value round-trips for every rendering branch of
-normalize.copy_value, per-batch commit semantics on a failed COPY,
+normalize.copy_value and normalize.sql_literal, landing the same
+values through both Postgres sinks (_PG_SINKS), per-batch commit
+semantics on a failed COPY,
 TRUNCATE, the staging atomic swap, and the Importer end-to-end from
 a driver-generated parquet fixture.
 
@@ -31,6 +33,7 @@ import pyspark.sql.functions as F
 from parquet_to_sql_spark.importer import Importer
 from parquet_to_sql_spark.sinks import pg_wire
 from parquet_to_sql_spark.sinks.copy_pg import CopySink
+from parquet_to_sql_spark.sinks.insert_pg import InsertSink
 
 SF_TINY = "/root/testdata/sf0.001"
 
@@ -93,12 +96,18 @@ def _exec(dsn: str, *stmts: str) -> list[tuple]:
         conn.close()
 
 
+# Both Postgres sinks render in the JVM (copy_value / sql_literal) and
+# must land the same values; the value tests below run each sink into
+# its own table.
+_PG_SINKS = (CopySink, InsertSink)
+
+
 def test_copy_sink_roundtrips_every_rendering_branch(spark, pg_dsn):
-    """One row per rendering branch of normalize.copy_value, verified
-    by reading the live table back: strings with COPY specials, null,
-    bool -> 1/0, timestamp micro+offset format, nested -> JSON(B),
-    binary -> bytea hex, decimal/double/float/smallint/bigint/date
-    passthrough."""
+    """One row per rendering branch of normalize.copy_value and
+    normalize.sql_literal, verified for each sink by reading its live
+    table back: strings with COPY specials and quotes, null, bool,
+    timestamp micro+offset format, nested -> JSON(B), binary -> bytea
+    hex, decimal/double/float/smallint/bigint/date passthrough."""
     df = spark.createDataFrame(
         [
             (
@@ -108,7 +117,7 @@ def test_copy_sink_roundtrips_every_rendering_branch(spark, pg_dsn):
                 "12345.67", 2.5, -7, 1_234_567_890_123, "2024-03-01", 0.25,
             ),
             (
-                2, "tab\there nl\nthere back\\slash é \\N", False,
+                2, "tab\there nl\nthere back\\slash é \\N it's", False,
                 None, None, None, None, None, None, None, None, None, None,
             ),
         ],
@@ -124,34 +133,35 @@ def test_copy_sink_roundtrips_every_rendering_branch(spark, pg_dsn):
         F.col("dt").cast("date").alias("dt"),
         "f4",
     )
-    _exec(
-        pg_dsn,
-        "DROP TABLE IF EXISTS roundtrip",
-        """CREATE TABLE roundtrip (
-             id int, s text, flag boolean, ts timestamptz, meta jsonb,
-             tags jsonb, payload bytea, d numeric(10,2), n float8,
-             i2 smallint, i8 bigint, dt date, f4 float4)""",
-    )
-    written = CopySink(pg_dsn).write(df, "roundtrip")
-    assert written == 2
+    for sink in _PG_SINKS:
+        table = f"roundtrip_{sink.__name__.lower()}"
+        _exec(
+            pg_dsn,
+            f"DROP TABLE IF EXISTS {table}",
+            f"""CREATE TABLE {table} (
+                 id int, s text, flag boolean, ts timestamptz, meta jsonb,
+                 tags jsonb, payload bytea, d numeric(10,2), n float8,
+                 i2 smallint, i8 bigint, dt date, f4 float4)""",
+        )
+        assert sink(pg_dsn).write(df, table) == 2
 
-    rows = _exec(
-        pg_dsn,
-        """SELECT id::text, s, flag::text,
-                  to_char(ts AT TIME ZONE 'UTC', 'YYYY-MM-DD HH24:MI:SS.US'),
-                  meta::text, tags::text, encode(payload, 'hex'),
-                  d::text, n::text, i2::text, i8::text, dt::text, f4::text
-           FROM roundtrip ORDER BY id""",
-    )
-    assert rows[0] == (
-        "1", "plain", "true", "2024-01-02 03:04:05.123456",
-        '{"k": "v"}', "[1, 2, 3]", "00ff41", "12345.67", "2.5",
-        "-7", "1234567890123", "2024-03-01", "0.25",
-    )
-    assert rows[1] == (
-        "2", "tab\there nl\nthere back\\slash é \\N", "false",
-        None, None, None, None, None, None, None, None, None, None,
-    )
+        rows = _exec(
+            pg_dsn,
+            f"""SELECT id::text, s, flag::text,
+                      to_char(ts AT TIME ZONE 'UTC', 'YYYY-MM-DD HH24:MI:SS.US'),
+                      meta::text, tags::text, encode(payload, 'hex'),
+                      d::text, n::text, i2::text, i8::text, dt::text, f4::text
+               FROM {table} ORDER BY id""",
+        )
+        assert rows[0] == (
+            "1", "plain", "true", "2024-01-02 03:04:05.123456",
+            '{"k": "v"}', "[1, 2, 3]", "00ff41", "12345.67", "2.5",
+            "-7", "1234567890123", "2024-03-01", "0.25",
+        ), sink
+        assert rows[1] == (
+            "2", "tab\there nl\nthere back\\slash é \\N it's", "false",
+            None, None, None, None, None, None, None, None, None, None,
+        ), sink
 
 
 # Doubles whose text form is hardest to round-trip: shortest-repr
@@ -165,31 +175,34 @@ _HARD_FLOATS = [
 
 
 def test_copy_sink_floats_are_bit_exact(spark, pg_dsn):
-    """The text COPY path lands every hard float8 and float4 value
-    bit-exactly: the server's float8send/float4send bytes equal the
-    IEEE bytes of the value Spark held (float4 from Spark's own
-    double -> float cast, so out-of-range doubles become 0 or inf)."""
+    """Both sinks land every hard float8 and float4 value bit-exactly:
+    the server's float8send/float4send bytes equal the IEEE bytes of
+    the value Spark held (float4 from Spark's own double -> float
+    cast, so out-of-range doubles become 0 or inf) — -0.0 included,
+    which an unquoted INSERT literal would land as +0."""
     import struct
 
     df = spark.createDataFrame(
         list(enumerate(_HARD_FLOATS)), "id int, f8 double"
     ).withColumn("f4", F.col("f8").cast("float"))
-    _exec(
-        pg_dsn,
-        "DROP TABLE IF EXISTS float_bits",
-        "CREATE TABLE float_bits (id int, f8 float8, f4 float4)",
-    )
-    assert CopySink(pg_dsn).write(df, "float_bits") == len(_HARD_FLOATS)
     want = [
         (str(i), struct.pack(">d", f8).hex(), struct.pack(">f", f4).hex())
         for i, f8, f4 in sorted(df.collect())
     ]
-    got = _exec(
-        pg_dsn,
-        "SELECT id::text, encode(float8send(f8), 'hex'), "
-        "encode(float4send(f4), 'hex') FROM float_bits ORDER BY float_bits.id",
-    )
-    assert got == want
+    for sink in _PG_SINKS:
+        table = f"float_bits_{sink.__name__.lower()}"
+        _exec(
+            pg_dsn,
+            f"DROP TABLE IF EXISTS {table}",
+            f"CREATE TABLE {table} (id int, f8 float8, f4 float4)",
+        )
+        assert sink(pg_dsn).write(df, table) == len(_HARD_FLOATS)
+        got = _exec(
+            pg_dsn,
+            "SELECT id::text, encode(float8send(f8), 'hex'), "
+            f"encode(float4send(f4), 'hex') FROM {table} ORDER BY {table}.id",
+        )
+        assert got == want, sink
 
 
 def test_copy_failed_batch_commits_prior_batches(spark, pg_dsn):
@@ -499,13 +512,13 @@ def test_choose_sink_capability_detection_live(spark, pg_dsn):
     ]
 
 
-def test_insert_literal_roundtrip_property(pg_dsn):
+def test_insert_literal_roundtrip_property(spark, pg_dsn):
     """Property: any Unicode string (minus NUL, which Postgres text
-    cannot store) survives sql_literal -> INSERT -> SELECT unchanged.
-    Runs against the live server through the wire client, no Spark."""
+    cannot store) survives sql_literal -> INSERT -> SELECT unchanged,
+    rendered in the JVM from a LocalRelation and sent by InsertSink."""
     from hypothesis import HealthCheck, given, settings, strategies as st
 
-    from parquet_to_sql_spark.sinks.insert_pg import sql_literal
+    from parquet_to_sql_spark.session import local_relation
 
     _exec(
         pg_dsn,
@@ -527,11 +540,8 @@ def test_insert_literal_roundtrip_property(pg_dsn):
     )
     @given(st.lists(texts, min_size=1, max_size=5))
     def check(vals):
-        _exec(pg_dsn, "TRUNCATE TABLE lit_prop")
-        stmt = "INSERT INTO lit_prop (i, s) VALUES " + ", ".join(
-            f"({i}, {sql_literal(v)})" for i, v in enumerate(vals)
-        )
-        _exec(pg_dsn, stmt)
+        df = local_relation(spark, list(enumerate(vals)), "i int, s string")
+        assert InsertSink(pg_dsn).write(df, "lit_prop", truncate=True) == len(vals)
         rows = _exec(pg_dsn, "SELECT i::text, s FROM lit_prop ORDER BY i::int")
         assert [r[1] for r in rows] == vals
 
@@ -565,9 +575,10 @@ def test_write_atomic_reclaims_stale_ledger(spark, pg_dsn):
 
 
 def test_interval_column_loads_into_ddl_table(spark, pg_dsn):
-    """create_table_sql + CopySink must round-trip an interval column
-    into a NATIVE pg interval — INCLUDING negative values.  The
-    renderer emits unit-explicit totals ('<n> microseconds',
+    """create_table_sql + either Postgres sink must round-trip an
+    interval column into a NATIVE pg interval — INCLUDING negative
+    values, with the same text form and fields from both sinks.  The
+    renderers emit unit-explicit totals ('<n> microseconds',
     '<n> months') because PG's default IntervalStyle treats each field
     of '-1 02:03:04' as independently signed (-1 days +02:03:04), so
     any day+time textual form silently corrupts negative intervals."""
@@ -579,18 +590,23 @@ def test_interval_column_loads_into_ddl_table(spark, pg_dsn):
         "-make_dt_interval(1, 2, 3, 4.5) AS neg_dur",
         "-make_ym_interval(1, 2) AS neg_span",
     )
-    _exec(pg_dsn, "DROP TABLE IF EXISTS iv_t", create_table_sql("iv_t", df.schema))
-    assert CopySink(pg_dsn).write(df, "iv_t") == 1
-    rows = _exec(
-        pg_dsn,
-        "SELECT k::text, EXTRACT(epoch FROM dur)::bigint::text, span::text,"
-        " EXTRACT(epoch FROM neg_dur)::numeric::text, neg_span::text FROM iv_t",
-    )
-    # -(1d 02:03:04.5) must come back as -93784.5 s, NOT the
-    # field-signed -1d +02:03:04.5 (= -79415.5 s)
-    assert rows[0] == (
-        "1", "93784", "1 year 2 mons", "-93784.500000", "-1 years -2 mons"
-    )
+    for sink in _PG_SINKS:
+        table = f"iv_t_{sink.__name__.lower()}"
+        _exec(pg_dsn, f"DROP TABLE IF EXISTS {table}", create_table_sql(table, df.schema))
+        assert sink(pg_dsn).write(df, table) == 1
+        rows = _exec(
+            pg_dsn,
+            "SELECT k::text, EXTRACT(epoch FROM dur)::bigint::text, span::text,"
+            " EXTRACT(epoch FROM neg_dur)::numeric::text, neg_span::text,"
+            f" dur::text, neg_dur::text, EXTRACT(day FROM neg_dur)::text FROM {table}",
+        )
+        # -(1d 02:03:04.5) must come back as -93784.5 s, NOT the
+        # field-signed -1d +02:03:04.5 (= -79415.5 s), and as the
+        # same microseconds-only value from both sinks
+        assert rows[0] == (
+            "1", "93784", "1 year 2 mons", "-93784.500000", "-1 years -2 mons",
+            "26:03:04", "-26:03:04.5", "0",
+        ), sink
 
 
 class _Psycopg2StyleCursor:

@@ -947,36 +947,46 @@ def test_sequence_gaps_ignores_null_keys(spark):
     assert got == [(3, 4, 2), (6, 8, 3)]
 
 
-# (keys, shuffle partitions): the degenerate inputs of the two-level
-# scans.  "seam_gaps_only" is four 10-key runs over 4 partitions: with
-# every row sampled, range partitioning puts one run in each
-# partition, so each gap is found only at a seam.
+# (keys, shuffle partitions, which keys carry a NULL value): the
+# degenerate inputs of the two-level scans.  "seam_gaps_only" is four
+# 10-key runs over 4 partitions: with every row sampled, range
+# partitioning puts one run in each partition, so each gap is found
+# only at a seam.  The NULL-value cases leave whole partitions, or
+# every row's in-partition prefix, without a non-NULL value.
 _TWO_LEVEL_CASES = {
-    "empty": ([], 4),
-    "all_null_keys": ([None] * 50, 4),
-    "single_row": ([7], 4),
-    "more_partitions_than_rows": ([3, 5, 6, 10, 11], 16),
-    "seam_gaps_only": ([k for base in (0, 20, 40, 60) for k in range(base, base + 10)], 4),
+    "empty": ([], 4, None),
+    "all_null_keys": ([None] * 50, 4, None),
+    "single_row": ([7], 4, None),
+    "more_partitions_than_rows": ([3, 5, 6, 10, 11], 16, None),
+    "seam_gaps_only": ([k for base in (0, 20, 40, 60) for k in range(base, base + 10)], 4, None),
+    "null_values_upper_half": (list(range(40)), 4, lambda k: k >= 20),
+    "null_values_k_mod_10_lt_5": (list(range(40)), 4, lambda k: k % 10 < 5),
+    "all_null_values": (list(range(40)), 4, lambda k: True),
 }
 
 
 @pytest.mark.parametrize("case", sorted(_TWO_LEVEL_CASES))
 def test_two_level_scans_on_degenerate_inputs(spark, case):
-    """prefix_sum and sequence_gaps vs their sequential references on
-    inputs that leave the driver-side offsets/seams relation empty,
-    all-NULL, one row, or made only of seams."""
+    """prefix_sum, grouped_prefix_sum and sequence_gaps vs their
+    references (the SQL windows, a sequential gap scan) on inputs that
+    leave the driver-side offsets/seams relation empty, all-NULL, one
+    row, made only of seams, or summing NULL values."""
     import pyspark.sql.functions as F
+    from pyspark.sql import Window
 
-    from parquet_to_sql_spark.operators.prefix import prefix_sum
+    from parquet_to_sql_spark.operators.prefix import grouped_prefix_sum, prefix_sum
     from parquet_to_sql_spark.operators.relational import sequence_gaps
     from parquet_to_sql_spark.session import local_relation
 
-    keys, n_parts = _TWO_LEVEL_CASES[case]
-    rows = [(k, i, 3 * i + 1) for i, k in enumerate(keys)]
+    keys, n_parts, null_w = _TWO_LEVEL_CASES[case]
+    rows = [
+        (k, i, None if null_w and null_w(k) else 3 * i + 1, None if k is None else k % 2)
+        for i, k in enumerate(keys)
+    ]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     try:
-        df = local_relation(spark, rows, "k long, tb long, w long")
+        df = local_relation(spark, rows, "k long, tb long, w long, g long")
         if case == "seam_gaps_only":
             runs = sorted(
                 (r.lo, r.hi)
@@ -987,16 +997,16 @@ def test_two_level_scans_on_degenerate_inputs(spark, case):
             )
             assert runs == [(0, 9), (20, 29), (40, 49), (60, 69)]
 
-        # NULL keys sort first, as in ORDER BY k, tb
-        cum, want_sums = 0, {}
-        for k, tb, w in sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0, r[1])):
-            cum += w
-            want_sums[tb] = cum
-        got_sums = {
-            r.tb: r.running_total
-            for r in prefix_sum(df, ["k", "tb"], "w").collect()
-        }
+        def sums(frame, col):
+            return {r.tb: r[col] for r in frame.collect()}
+
+        want_sums = sums(df.withColumn("s", F.sum("w").over(Window.orderBy("k", "tb"))), "s")
+        got_sums = sums(prefix_sum(df, ["k", "tb"], "w"), "running_total")
         assert got_sums == want_sums
+        grouped = Window.partitionBy("g").orderBy("k", "tb")
+        assert sums(grouped_prefix_sum(df, ["g"], ["k", "tb"], "w"), "running_total") == sums(
+            df.withColumn("s", F.sum("w").over(grouped)), "s"
+        )
 
         uniq = sorted({k for k in keys if k is not None})
         want_gaps = [(a + 1, b - 1, b - a - 1) for a, b in zip(uniq, uniq[1:]) if b > a + 1]
