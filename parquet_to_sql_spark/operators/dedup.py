@@ -54,17 +54,6 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle) pairs — the inverted-index input for Jaccard/LSH.
-    Rebalanced first: shingling costs far more than the scan."""
-    from parquet_to_sql_spark.operators.text import rebalance_for_compute
-
-    return rebalance_for_compute(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(ws_tokens(F.col(text_col)), n)).alias("shingle"),
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,

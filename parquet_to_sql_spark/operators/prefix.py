@@ -125,7 +125,6 @@ def grouped_prefix_sum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "running_total",
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """Per-GROUP inclusive running sums — ``SUM(v) OVER (PARTITION BY
     g ORDER BY k)`` — built for the case the plain window can't
@@ -148,14 +147,10 @@ def grouped_prefix_sum(
     NULL-group rows get correct running totals instead of being
     dropped by a null-blind equi-join (ADVICE r07).
 
-    ``broadcast_offsets``: the offsets relation is
-    O(#partitions + #groups) rows — dimension-join class through
-    ~10^7 groups, so the default broadcasts it back (a plain join
-    would re-shuffle the corpus the range exchange just placed).
-    Past that cardinality the broadcast itself overflows driver and
-    executor memory: pass ``False`` to let AQE shuffle-join the two
-    already-co-partitioned sides instead — the extreme-group-count
-    escape hatch, traded one exchange at a time, not a comment.
+    The offsets relation is O(#partitions + #groups) rows —
+    dimension-join class through ~10^7 groups — so it is broadcast
+    back (a plain join would re-shuffle the corpus the range exchange
+    just placed).
 
     The localCheckpoint pins non-deterministic range boundaries
     across the two consuming passes, same reasoning as prefix_sum.
@@ -190,13 +185,11 @@ def grouped_prefix_sum(
     # NULL group keys, silently dropping the NULL partition's rows.
     # The offsets side's join columns are renamed so the condition is
     # unambiguous and the output keeps the input's columns untouched.
-    off = offsets.select(
+    off = F.broadcast(offsets.select(
         F.col("_pid").alias("_opid"),
         *[F.col(c).alias(f"_og{i}") for i, c in enumerate(group_cols)],
         "_off",
-    )
-    if broadcast_offsets:
-        off = F.broadcast(off)
+    ))
     cond = F.col("_pid") == F.col("_opid")
     for i, c in enumerate(group_cols):
         cond = cond & F.col(c).eqNullSafe(F.col(f"_og{i}"))

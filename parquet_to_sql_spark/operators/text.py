@@ -77,14 +77,6 @@ def rebalance_for_compute(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def token_counts(text: Column) -> dict[str, Column]:
-    return {
-        "n_ws_tokens": F.size(ws_tokens(text)),
-        "n_bpe_tokens": F.size(F.regexp_extract_all(text, F.lit(TOKEN_REGEX), 0)),
-        "n_chars": F.length(text),
-    }
-
-
 def _lang_hits_from(lower_words: Column) -> dict[str, Column]:
     """Stopword hits per language (lexicon words present in the doc)."""
     return {

@@ -1,9 +1,11 @@
 """Join coverage: every join type, plus range and as-of joins.
 
 Absent from the reference (SURVEY.md §2.B — no joins anywhere in
-/root/reference/src). Expressed with the DataFrame API so Catalyst
-picks the physical strategy; tiny dimensions are explicitly
-broadcast() so the 100 TB plan never shuffles the fact table for them.
+/root/reference/src). Expressed declaratively so Catalyst picks the
+physical strategy; tiny dimensions are explicitly broadcast (a
+BROADCAST hint in the TPC-H texts, which double as their DuckDB
+oracles; broadcast() elsewhere) so the 100 TB plan never shuffles the
+fact table for them.
 """
 
 from __future__ import annotations
@@ -18,134 +20,87 @@ from parquet_to_sql_spark.session import local_relation
 from parquet_to_sql_spark.queries.relational import (  # shared — do not fork
     DISC_PRICE,
     SUM_REVENUE,
+    _sql,
 )
 
 
-@query(
-    "q3_shipping_priority",
-    headline=True,
-    tags=("join", "aggregation", "topk", "tpch"),
-    oracle=f"""
-    SELECT
-      l_orderkey,
-      {SUM_REVENUE} AS revenue,
-      o_orderdate,
-      o_orderpriority
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-      AND l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, o_orderdate, l_orderkey
-    LIMIT 10
-    """,
-)
+_Q3 = f"""
+SELECT /*+ BROADCAST(customer) */
+  l_orderkey,
+  {SUM_REVENUE} AS revenue,
+  o_orderdate,
+  o_orderpriority
+FROM lineitem
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+  AND l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
+GROUP BY l_orderkey, o_orderdate, o_orderpriority
+ORDER BY revenue DESC, o_orderdate, l_orderkey
+LIMIT 10
+"""
+
+
+@query("q3_shipping_priority", headline=True,
+       tags=("join", "aggregation", "topk", "tpch"), oracle=_Q3)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-style: 3-way join, filtered, aggregated, top-10.
 
-    customer is small relative to lineitem at every SF -> broadcast;
+    customer is small relative to lineitem at every SF -> broadcast by
+    the text's BROADCAST hint (a plain comment to DuckDB);
     orders⋈lineitem shuffles on orderkey once. Top-k plans as
     TakeOrderedAndProject (no global sort)."""
-    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-03-15 00:00:00").cast("timestamp")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.expr(SUM_REVENUE).alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
+    return _sql(spark, sf_dir, _Q3, ("lineitem", "orders", "customer"))
 
 
-@query(
-    "q5_local_supplier_volume",
-    headline=True,
-    tags=("join", "aggregation", "tpch"),
-    oracle=f"""
-    SELECT n_name, {SUM_REVENUE} AS revenue
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-    JOIN nation   ON s_nationkey = n_nationkey
-    JOIN region   ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY n_name
-    """,
-)
+_Q5 = f"""
+SELECT /*+ BROADCAST(supplier, nation, region) */
+  n_name, {SUM_REVENUE} AS revenue
+FROM lineitem
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN nation   ON s_nationkey = n_nationkey
+JOIN region   ON n_regionkey = r_regionkey
+WHERE r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
+GROUP BY n_name
+"""
+
+
+@query("q5_local_supplier_volume", headline=True,
+       tags=("join", "aggregation", "tpch"), oracle=_Q5)
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-style 6-way join. region/nation/supplier broadcast;
-    the only big shuffle is lineitem⋈orders on orderkey."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(supp),
-            (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey),
-        )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.expr(SUM_REVENUE).alias("revenue"))
-    )
+    the only big shuffle is lineitem⋈orders on orderkey.  The text's
+    BROADCAST hint pins the three broadcasts."""
+    return _sql(spark, sf_dir, _Q5,
+                ("lineitem", "orders", "customer", "supplier", "nation", "region"))
 
 
-@query(
-    "q10_returned_items",
-    headline=True,
-    tags=("join", "aggregation", "topk", "tpch"),
-    oracle=f"""
-    SELECT c_custkey, c_name, {SUM_REVENUE} AS revenue,
-           n_name, CAST(COUNT(*) AS BIGINT) AS n_items
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    WHERE l_returnflag = 'R'
-    GROUP BY c_custkey, c_name, n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-)
+_Q10 = f"""
+SELECT /*+ BROADCAST(nation) */
+  c_custkey, c_name, {SUM_REVENUE} AS revenue,
+  n_name, CAST(COUNT(*) AS BIGINT) AS n_items
+FROM lineitem
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation   ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+GROUP BY c_custkey, c_name, n_name
+ORDER BY revenue DESC, c_custkey
+LIMIT 20
+"""
+
+
+@query("q10_returned_items", headline=True,
+       tags=("join", "aggregation", "topk", "tpch"), oracle=_Q10)
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10-style: who returned the most revenue."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.expr(SUM_REVENUE).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .select("c_custkey", "c_name", "revenue", "n_name", "n_items")
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
+    return _sql(spark, sf_dir, _Q10,
+                ("lineitem", "orders", "customer", "nation"))
 
 
 @query(

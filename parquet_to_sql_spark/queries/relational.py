@@ -78,27 +78,27 @@ def _sql(spark: SparkSession, sf_dir: str, text: str, tables: tuple[str, ...]) -
     return spark.sql(text)
 
 
-@query(
-    "q1_pricing_summary",
-    headline=True,
-    tags=("aggregation", "filter", "tpch"),
-    oracle=f"""
-    SELECT
-      l_returnflag,
-      l_linestatus,
-      CAST(SUM({QC}) AS DOUBLE) / 100.0            AS sum_qty,
-      CAST(SUM({PC}) AS DOUBLE) / 100.0            AS sum_base_price,
-      {SUM_REVENUE}                                AS sum_disc_price,
-      {SUM_CHARGE}                                 AS sum_charge,
-      CAST(SUM({QC}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_qty,
-      CAST(SUM({PC}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_price,
-      CAST(SUM({DC}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_disc,
-      COUNT(*)                                     AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2000-09-01 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
+_Q1 = f"""
+SELECT
+  l_returnflag,
+  l_linestatus,
+  CAST(SUM({QC}) AS DOUBLE) / 100.0            AS sum_qty,
+  CAST(SUM({PC}) AS DOUBLE) / 100.0            AS sum_base_price,
+  {SUM_REVENUE}                                AS sum_disc_price,
+  {SUM_CHARGE}                                 AS sum_charge,
+  CAST(SUM({QC}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_qty,
+  CAST(SUM({PC}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_price,
+  CAST(SUM({DC}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_disc,
+  COUNT(*)                                     AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '2000-09-01 00:00:00'
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+"""
+
+
+@query("q1_pricing_summary", headline=True,
+       tags=("aggregation", "filter", "tpch"), oracle=_Q1)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style pricing summary: scan-filter-aggregate.
 
@@ -108,73 +108,38 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Arithmetic: the integer-cents fragments (QC/PC/DISC_PRICE_CENTS/
     CHARGE_CENTS) keep the whole hot loop in primitive longs — exact
-    because every money/quantity column is a 2-decimal value — and one
-    shared SQL text feeds both engines.  Measured 1.8x faster than the
-    DECIMAL(12,2)-cast formulation, whose sums widen past precision 18
-    and fall off Spark's long-backed Decimal fast path.  The widest
-    fragment (CHARGE_CENTS, scale 1e6) is summed via the SUM_CHARGE
-    hi/lo split so it cannot hit the int64 ceiling at large SF (see
-    the fragment comment for the budget)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    cnt = F.count(F.lit(1))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2000-09-01 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            (F.sum(F.expr(QC)).cast("double") / F.lit(100.0)).alias("sum_qty"),
-            (F.sum(F.expr(PC)).cast("double") / F.lit(100.0)).alias("sum_base_price"),
-            F.expr(SUM_REVENUE).alias("sum_disc_price"),
-            F.expr(SUM_CHARGE).alias("sum_charge"),
-            (F.sum(F.expr(QC)).cast("double") / F.lit(100.0) / cnt).alias("avg_qty"),
-            (F.sum(F.expr(PC)).cast("double") / F.lit(100.0) / cnt).alias("avg_price"),
-            (F.sum(F.expr(DC)).cast("double") / F.lit(100.0) / cnt).alias("avg_disc"),
-            cnt.alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+    because every money/quantity column is a 2-decimal value — and the
+    one SQL text ``_Q1`` is both the Spark plan and the DuckDB oracle.
+    Measured 1.8x faster than the DECIMAL(12,2)-cast formulation,
+    whose sums widen past precision 18 and fall off Spark's
+    long-backed Decimal fast path.  The widest fragment (CHARGE_CENTS,
+    scale 1e6) is summed via the SUM_CHARGE hi/lo split so it cannot
+    hit the int64 ceiling at large SF (see the fragment comment for
+    the budget)."""
+    return _sql(spark, sf_dir, _Q1, ("lineitem",))
 
 
-@query(
-    "q6_forecast_revenue",
-    headline=True,
-    tags=("filter", "aggregation", "tpch"),
-    oracle=f"""
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * CAST(l_discount AS DECIMAL(3,2))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      AND l_discount BETWEEN 0.03 AND 0.05
-      AND l_quantity < 24
-    """,
-)
+_Q6 = """
+SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
+                * CAST(l_discount AS DECIMAL(3,2))) AS DOUBLE) AS revenue,
+       COUNT(*) AS n_items
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
+  AND l_discount BETWEEN 0.03 AND 0.05
+  AND l_quantity < 24
+"""
+
+
+@query("q6_forecast_revenue", headline=True,
+       tags=("filter", "aggregation", "tpch"), oracle=_Q6)
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6-style: highly selective conjunctive filter + global agg.
 
     All four predicates push into the Parquet scan (min/max row-group
     pruning on shipdate); the aggregate is a single partial+final pass,
     shuffling one row per partition."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.03)
-            & (F.col("l_discount") <= 0.05)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                F.expr(
-                    "CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(3,2))"
-                )
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
+    return _sql(spark, sf_dir, _Q6, ("lineitem",))
 
 
 @query(

@@ -31,7 +31,7 @@ def test_query_matches_oracle(spark, name):
 # where group sums are 10x closer to any overflow/precision cliff.
 _REWRITTEN_HOT = (
     "q1_pricing_summary", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q10_returned_items",
+    "q5_local_supplier_volume", "q6_forecast_revenue", "q10_returned_items",
     # r5: assume_unique edge-path change after their r4 green rows
     "dedup_graph_triangles", "dedup_graph_pagerank",
 )

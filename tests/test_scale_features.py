@@ -96,17 +96,37 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_broadcast_join_in_headline_plan(spark):
-    """q5's fact table must never shuffle: every dim joins via
-    BroadcastHashJoin and the only Exchange is the final aggregate's."""
+# BroadcastHashJoins in each plan (formatted mode prints each
+# operator twice: tree + details): every join, and with automatic
+# broadcast off, the joins of the tables the SQL's BROADCAST hint names
+_HEADLINE_BHJ = {
+    "q3_shipping_priority": (4, 2),
+    "q5_local_supplier_volume": (10, 6),
+    "q10_returned_items": (6, 2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_HEADLINE_BHJ))
+def test_broadcast_join_in_headline_plan(spark, name):
+    """The fact table of q3/q5/q10 must never shuffle: every dim joins
+    via BroadcastHashJoin and the only Exchange is the final
+    aggregate's.  The hinted dims stay broadcast when the size-based
+    choice is switched off, so the hint, not the fixture's size, pins
+    them."""
     from parquet_to_sql_spark.queries.registry import all_queries
 
-    df = all_queries()["q5_local_supplier_volume"].build(spark, SF_SMOKE)
-    plan = _formatted_plan(df)
-    # formatted mode prints each operator twice (tree + details)
-    assert plan.count("BroadcastHashJoin") == 10
+    every, hinted = _HEADLINE_BHJ[name]
+    plan = _formatted_plan(all_queries()[name].build(spark, SF_SMOKE))
+    assert plan.count("BroadcastHashJoin") == every
     shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert shuffles == 2, f"expected only the final-aggregate shuffle, got {shuffles // 2}"
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _formatted_plan(all_queries()[name].build(spark, SF_SMOKE))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert plan.count("BroadcastHashJoin") == hinted
 
 
 def test_filter_pushdown_reaches_scan(spark):
